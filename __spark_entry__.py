@@ -1001,10 +1001,9 @@ def _q_incremental_sql_dedupe(spark, sf_dir):
     (CC keep-min) and its survivors seed the state; batch 2 is deduped
     within itself, then its survivors are dropped iff they share a band
     with a retained state doc and score jaccard ≥ threshold. Returns the
-    second batch's kept ids. Pair topology is all_pairs for the same
-    reason run_sql_pipeline forces it (the oracle's cand CTEs define the
-    candidate set as all band-colliding pairs)."""
-    import dataclasses
+    second batch's kept ids. The sql family forces the all_pairs topology
+    (the oracle's cand CTEs define the candidate set as all band-colliding
+    pairs; plans/pipeline.py FAMILIES)."""
     import hashlib
     import shutil
 
@@ -1013,7 +1012,6 @@ def _q_incremental_sql_dedupe(spark, sf_dir):
         dedupe_increment,
     )
 
-    cfg = dataclasses.replace(CFG, pair_topology="all_pairs")
     state_dir = "/tmp/spark_graft_incr_sql_state_" + f"{os.getpid()}_" + hashlib.md5(
         sf_dir.encode()
     ).hexdigest()[:10]
@@ -1026,8 +1024,8 @@ def _q_incremental_sql_dedupe(spark, sf_dir):
     first = docs.filter(F.col("doc_id") < n // 2)
     second = docs.filter(F.col("doc_id") >= n // 2)
     state = SignatureState(spark, state_dir)
-    dedupe_increment(spark, first, state, cfg, family="sql")
-    kept2 = dedupe_increment(spark, second, state, cfg, family="sql")
+    dedupe_increment(spark, first, state, CFG, family="sql")
+    kept2 = dedupe_increment(spark, second, state, CFG, family="sql")
     return kept2.select("doc_id")
 
 
@@ -1044,7 +1042,6 @@ def _q_incremental_sql_strict(spark, sf_dir):
     ordering semantics specifically. The oracle replays both greedy
     passes with the round-capped single-row list-state recursive CTE the
     lsh_sql_greedy_kept oracle introduced."""
-    import dataclasses
     import hashlib
     import shutil
 
@@ -1053,7 +1050,6 @@ def _q_incremental_sql_strict(spark, sf_dir):
         dedupe_increment,
     )
 
-    cfg = dataclasses.replace(CFG, pair_topology="all_pairs")
     state_dir = "/tmp/spark_graft_incr_sqlstrict_state_" + f"{os.getpid()}_" + hashlib.md5(
         sf_dir.encode()
     ).hexdigest()[:10]
@@ -1068,19 +1064,22 @@ def _q_incremental_sql_strict(spark, sf_dir):
     first = docs.filter(F.col("doc_id") < n // 2)
     second = docs.filter(F.col("doc_id") >= n // 2)
     state = SignatureState(spark, state_dir)
-    dedupe_increment(spark, first, state, cfg, strict_order=True, family="sql")
-    kept2 = dedupe_increment(spark, second, state, cfg, strict_order=True, family="sql")
+    dedupe_increment(spark, first, state, CFG, strict_order=True, family="sql")
+    kept2 = dedupe_increment(spark, second, state, CFG, strict_order=True, family="sql")
     return kept2.select("doc_id")
 
 
 def _q_sqlmode(stop_after, project):
     """Factory for the SQL-expressible LSH chain queries (plans/sql_mode.py):
-    same topology as the parity chain, md5 hash family, full DuckDB oracle."""
+    the parity chain's stage DAG under the md5 hash family, full DuckDB
+    oracle."""
 
     def q(spark, sf_dir):
-        from cpp_near_dedupe_spark.plans.sql_mode import run_sql_pipeline
+        from cpp_near_dedupe_spark.plans.pipeline import run_pipeline
 
-        res = run_sql_pipeline(spark, _docs(spark, sf_dir), CFG, stop_after=stop_after)
+        res = run_pipeline(
+            spark, _docs(spark, sf_dir), CFG, stop_after=stop_after, family="sql"
+        )
         return project(res)
 
     return q
@@ -1114,11 +1113,11 @@ _q_lsh_sql_clusters = _q_sqlmode(
 
 
 def _q_lsh_sql_dedupe_kept(spark, sf_dir):
-    from cpp_near_dedupe_spark.plans.sql_mode import run_sql_pipeline
+    from cpp_near_dedupe_spark.plans.pipeline import run_pipeline
     from cpp_near_dedupe_spark.operators.resolve import dedupe_output
 
     docs = _docs(spark, sf_dir)
-    res = run_sql_pipeline(spark, docs, CFG)
+    res = run_pipeline(spark, docs, CFG, family="sql")
     return dedupe_output(docs, res.resolved, CFG).select("doc_id", "lang", "source")
 
 
@@ -1224,10 +1223,10 @@ def _q_lsh_sql_greedy_kept(spark, sf_dir):
     that lsh_sql_dedupe_kept verifies (13 divergent docs at sf0.01), so a
     green hash pins the greedy semantics specifically, not CC by accident."""
     from cpp_near_dedupe_spark.operators.greedy import greedy_resolve
-    from cpp_near_dedupe_spark.plans.sql_mode import run_sql_pipeline
+    from cpp_near_dedupe_spark.plans.pipeline import run_pipeline
 
     docs = _chain_docs(spark, sf_dir)
-    res = run_sql_pipeline(spark, docs, CFG, stop_after="edges")
+    res = run_pipeline(spark, docs, CFG, stop_after="edges", family="sql")
     # distinct_pairs: the pipeline's pair generator ends in dropDuplicates
     # and the scoring joins are 1:1, so the edge set is already distinct
     out = greedy_resolve(
@@ -1305,7 +1304,7 @@ def _q_arrow_ipc_roundtrip(spark, sf_dir):
     import hashlib
     import shutil
 
-    from cpp_near_dedupe_spark.plans.sql_mode import run_sql_pipeline
+    from cpp_near_dedupe_spark.plans.pipeline import run_pipeline
     from cpp_near_dedupe_spark.sources.arrow_ipc import (
         read_arrow_ipc,
         validate_arrow_ipc,
@@ -1319,7 +1318,7 @@ def _q_arrow_ipc_roundtrip(spark, sf_dir):
     shutil.rmtree(out_dir, ignore_errors=True)
 
     docs = read_arrow_ipc(spark, fix_dir)
-    res = run_sql_pipeline(spark, docs.select("doc_id", "text"), CFG)
+    res = run_pipeline(spark, docs.select("doc_id", "text"), CFG, family="sql")
     kept = docs.join(
         res.resolved.filter(F.col("is_kept")).select("doc_id"), "doc_id", "left_semi"
     )

@@ -89,12 +89,6 @@ def bucket_stats(rows: DataFrame, keys: list[str], id_col: str) -> DataFrame:
     )
 
 
-def bucket_sizes(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Back-compat wrapper: per-band-key stats for the default band table
-    shape (see ``bucket_stats``)."""
-    return bucket_stats(bands, ["band_key"], id_col)
-
-
 def capped_star_pairs(
     rows: DataFrame,
     keys: list[str],
@@ -366,5 +360,5 @@ def hot_bucket_stats(
     star-routing is observable, never silent. Pass the shared ``sizes``
     aggregate to avoid a second full pass over the bands table."""
     if sizes is None:
-        sizes = bucket_sizes(bands, cfg.id_col)
+        sizes = bucket_stats(bands, ["band_key"], cfg.id_col)
     return sizes.filter(F.col("bucket_size") > cfg.hot_band_cap)

@@ -3,8 +3,8 @@
 The target deployment input is an Iceberg table of Common-Crawl-style web
 pages ``(url, warc_ts, html, text, lang)`` whose stable row identity is
 ``url`` (sources/pages.py). This plan runs the SQL-expressible dedupe
-chain (plans/sql_mode.py) over that shape end-to-end through the url
-identity path:
+chain (``run_pipeline(family="sql")``) over that shape end-to-end through
+the url identity path:
 
   pages → with_doc_id (doc_id = xxhash64(url), fixed-width join keys)
         → sketch → bands → capped pairs → Jaccard ≥ t edges
@@ -36,9 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupeConfig
-from ..operators.clustering import connected_components
 from ..sources.pages import with_doc_id
-from .sql_mode import run_sql_pipeline
+from .pipeline import run_pipeline
 
 
 def synthesize_pages(docs: DataFrame) -> DataFrame:
@@ -92,14 +91,13 @@ def pages_record_linkage(
         "warc_ts",
     ]
     ids = keyed.select(*order_cols)
-    res = run_sql_pipeline(
-        spark, keyed.select("doc_id", "text"), cfg, stop_after="edges"
-    )
-    cc = connected_components(
-        res.edges.select("a", "b"),
-        max_iterations=cfg.cc_max_iterations,
-        distinct_pairs=True,
-    )
+    cc = run_pipeline(
+        spark,
+        keyed.select("doc_id", "text"),
+        cfg,
+        stop_after="clusters",
+        family="sql",
+    ).clusters
     passthru = [c for c in order_cols if c != "doc_id"]
     memb = (
         ids.join(cc.withColumnRenamed("id", "doc_id"), "doc_id", "left")

@@ -4,9 +4,15 @@ Replaces the reference's hard-wired thread topology
 (`/root/reference/CPPDeduper/CPPDeduper.cpp:85-217`) with six declarative
 DataFrame stages, each checkpointed to the stage store so any stage is
 resumable (north_rule): a rerun skips every stage whose checkpoint manifest
-entry matches the (config fingerprint, input token) — the Spark analogue of
-the reference's drain/restart-from-scratch model, which had no resumability
-at all.
+entry matches the (config fingerprint, hash family, input token) — the
+Spark analogue of the reference's drain/restart-from-scratch model, which
+had no resumability at all.
+
+The stage DAG is written once and run under either hash family
+(``FAMILIES``): ``parity`` (the reference-bit-equal XXH64 sketch, the
+production default) or ``sql`` (the md5 family of plans/sql_mode.py, which
+a DuckDB oracle can replay hash for hash). The family fixes its own stage
+functions and the rules its oracle pins; callers choose only the family.
 
 Checkpoint store: parquet directories + a JSON manifest. In a production
 deployment each stage writes an Iceberg table and the manifest is the
@@ -18,10 +24,12 @@ requirement), including hot-band star-routing counts — no silent drops.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +42,7 @@ from ..operators.pairs import bucket_stats, candidate_pairs, hot_bucket_stats
 from ..operators.scoring import score_pairs
 from ..operators.clustering import connected_components
 from ..operators.resolve import resolve_clusters
+from .sql_mode import sql_bands, sql_score_pairs, sql_sketch
 
 STAGES = ("signatures", "sig_reps", "bands", "pairs", "edges", "clusters", "resolved")
 
@@ -41,6 +50,54 @@ STAGES = ("signatures", "sig_reps", "bands", "pairs", "edges", "clusters", "reso
 # checkpoints from older layouts can never be resumed into a new run
 # (v4: all_pairs hot-bucket routing became windowless hash-head+star)
 PIPELINE_VERSION = 4
+
+
+@dataclass(frozen=True)
+class HashFamily:
+    """A hash family's stage functions plus the rules its oracle fixes."""
+
+    sketch: Callable[[DataFrame, DedupeConfig], DataFrame]
+    bands: Callable[[DataFrame, DedupeConfig], DataFrame]
+    score: Callable[[DataFrame, DataFrame, DedupeConfig], DataFrame]
+    # pair topology the family's oracle defines (None: the config's own)
+    pair_topology: str | None = None
+    # identical-sketch collapse (signature_reps) ahead of blocking
+    collapse: bool = True
+
+    def config(self, cfg: DedupeConfig) -> DedupeConfig:
+        if self.pair_topology is None:
+            return cfg
+        return dataclasses.replace(cfg, pair_topology=self.pair_topology)
+
+
+# ``parity``: the production family (XXH64 over the reference tokenizer's
+# UTF-16 bytes, bit-equal to the reference, not SQL-expressible). ``sql``:
+# the md5 family of plans/sql_mode.py, which Spark and DuckDB compute
+# identically. Its oracle fixes two rules. (1) all_pairs: the oracle's
+# ``cand`` CTE is ALL distinct band-colliding pairs, which chain_star
+# provably omits in buckets of >= 4 docs (chain_star and the over-cap
+# branch keep their own oracles, ``lsh_sql_pairs_chain`` and
+# ``lsh_sql_pairs_capped``). (2) no collapse: the oracle's edges are the
+# scored, thresholded pairs only, with no J=1.0 member edges.
+FAMILIES = {
+    "parity": HashFamily(sketch_documents, explode_bands, score_pairs),
+    "sql": HashFamily(
+        sql_sketch,
+        sql_bands,
+        sql_score_pairs,
+        pair_topology="all_pairs",
+        collapse=False,
+    ),
+}
+
+
+def hash_family(name: str) -> HashFamily:
+    try:
+        return FAMILIES[name]
+    except KeyError:
+        raise ValueError(
+            f"unknown hash family {name!r} (use 'parity' or 'sql')"
+        ) from None
 
 
 class CheckpointStore:
@@ -160,18 +217,27 @@ def run_pipeline(
     checkpoint_dir: str | None = None,
     input_token: str = "",
     stop_after: str | None = None,
+    *,
+    family: str = "parity",
 ) -> PipelineResult:
     """Run (or resume) the dedupe pipeline over ``docs``.
 
-    ``docs`` must carry ``cfg.id_col`` (long, unique) and ``cfg.text_col``.
-    With ``checkpoint_dir``, completed stages (matching config fingerprint +
-    input token) are read back instead of recomputed; ``stop_after`` lets
-    callers run a prefix (used by the resume tests and by incremental jobs).
+    ``docs`` must carry ``cfg.id_col`` (unique) and ``cfg.text_col``.
+    With ``checkpoint_dir``, completed stages (matching config fingerprint,
+    hash family and input token) are read back instead of recomputed;
+    ``stop_after`` lets callers run a prefix (used by the resume tests and
+    by incremental jobs).
+
+    ``family`` selects the hash family (``FAMILIES``): ``"parity"`` runs
+    the identical-sketch collapse (``sig_reps``) under the config's pair
+    topology; ``"sql"`` runs all_pairs without the collapse, so every
+    stage output matches the DuckDB oracle of the md5 chain.
     """
-    cfg = cfg or DedupeConfig()
+    fam = hash_family(family)
+    cfg = fam.config(cfg or DedupeConfig())
     cfg.validate()
     store = CheckpointStore(spark, checkpoint_dir) if checkpoint_dir else None
-    fp = f"v{PIPELINE_VERSION}:" + cfg.fingerprint() + ":" + input_token
+    fp = f"v{PIPELINE_VERSION}:{family}:" + cfg.fingerprint() + ":" + input_token
 
     # Persist only stages that are CONSUMED MORE THAN ONCE downstream
     # (Spark does not CSE duplicated UDF subtrees, so e.g. unpersisted
@@ -180,7 +246,7 @@ def run_pipeline(
     # measured slower. bands has one consumer under chain_star (the
     # window) but three under all_pairs (cold/hot/overflow branches);
     # clusters feeds resolve's clustered-join, reps aggregation AND the
-    # singleton anti-join (3 consumers). bands feeds the bucket_sizes
+    # singleton anti-join (3 consumers). bands feeds the bucket_stats
     # aggregation plus the cold/hot branches under BOTH topologies.
     # "resolved" is NOT here (r6): every caller consumes it exactly once
     # (audited: entry/queries/dedupe_output all reference it in a single
@@ -201,7 +267,7 @@ def run_pipeline(
         return store.write(name, make(), fp)
 
     id_col = cfg.id_col
-    signatures = stage("signatures", lambda: sketch_documents(docs, cfg))
+    signatures = stage("signatures", lambda: fam.sketch(docs, cfg))
     if stop_after == "signatures":
         return PipelineResult(signatures, None, None, None, None, None)
 
@@ -210,14 +276,16 @@ def run_pipeline(
     # rejoin as direct J=1.0 edges before clustering. Clustering output is
     # identical-or-better (members are guaranteed connected even where the
     # hot-bucket cap would have star-routed them).
-    sig_reps = stage("sig_reps", lambda: signature_reps(signatures, cfg))
-    rep_sigs = signatures.join(
-        sig_reps.filter(F.col(id_col) == F.col("rep_id")).select(id_col),
-        id_col,
-        "left_semi",
-    )
+    sig_reps, rep_sigs = None, signatures
+    if fam.collapse:
+        sig_reps = stage("sig_reps", lambda: signature_reps(signatures, cfg))
+        rep_sigs = signatures.join(
+            sig_reps.filter(F.col(id_col) == F.col("rep_id")).select(id_col),
+            id_col,
+            "left_semi",
+        )
 
-    bands = stage("bands", lambda: explode_bands(rep_sigs, cfg))
+    bands = stage("bands", lambda: fam.bands(rep_sigs, cfg))
     if stop_after == "bands":
         return PipelineResult(signatures, bands, None, None, None, None)
 
@@ -250,9 +318,11 @@ def run_pipeline(
         return PipelineResult(signatures, bands, pairs, None, None, None)
 
     def make_edges() -> DataFrame:
-        scored = score_pairs(pairs, rep_sigs, cfg).filter(
+        scored = fam.score(pairs, rep_sigs, cfg).filter(
             F.col("jaccard") >= F.lit(cfg.threshold)
         )
+        if sig_reps is None:
+            return scored
         member_edges = (
             sig_reps.filter(F.col(id_col) != F.col("rep_id"))
             .select(

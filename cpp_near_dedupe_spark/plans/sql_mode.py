@@ -1,21 +1,22 @@
-"""SQL-expressible near-dedupe mode: the same pipeline topology, oracle-checkable.
+"""SQL-expressible near-dedupe mode: the md5 hash family's stage functions.
 
 The parity sketch (XXH64 over the reference tokenizer's UTF-16 bytes,
 `/root/reference/CPPDeduper/Shingler64.hpp:126-243`) is deliberately not
 SQL-expressible, so the driver can only rows-check that chain. This module
-runs the IDENTICAL pipeline topology — tokenize → k-shingle → hash →
-distinct → bottom-N → band split → band-key equi-join → pair distinct →
-set-Jaccard → threshold → connected components → keep-min resolve
-(SURVEY.md §2: T2-T6, B1-B5, J1/J4, C1, O2) — over a hash family both
-Spark and DuckDB implement identically (md5 of the shingle string), making
-every stage hash-verifiable against an ANSI-SQL oracle.
+supplies the sketch, band and score stages of the IDENTICAL pipeline
+topology — tokenize → k-shingle → hash → distinct → bottom-N → band split
+→ band-key equi-join → pair distinct → set-Jaccard → threshold → connected
+components → keep-min resolve (SURVEY.md §2: T2-T6, B1-B5, J1/J4, C1, O2)
+— over a hash family both Spark and DuckDB implement identically (md5 of
+the shingle string), making every stage hash-verifiable against an
+ANSI-SQL oracle.
 
 Everything here is built-in `pyspark.sql.functions` — zero Python UDFs;
-the whole sketch stays inside whole-stage codegen. The blocking/pairing/
-clustering/resolve stages are the same operator implementations the parity
-mode uses (operators/pairs.py, operators/clustering.py,
-operators/resolve.py), so a green driver row for this mode verifies the
-shared join/distinct/CC/anti-join machinery, not a parallel code path.
+the whole sketch stays inside whole-stage codegen. The chain itself runs
+through ``run_pipeline(..., family="sql")`` (plans/pipeline.py): the same
+stage DAG, checkpoint store and blocking/pairing/clustering/resolve
+operators as the parity family, so a green oracle row for this mode
+verifies the shared machinery, not a parallel code path.
 
 Semantics (mirrored exactly by the DuckDB oracle in __spark_entry__.py):
 
@@ -32,15 +33,10 @@ Semantics (mirrored exactly by the DuckDB oracle in __spark_entry__.py):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupeConfig
-from ..operators.pairs import candidate_pairs
-from ..operators.clustering import connected_components
-from ..operators.resolve import resolve_clusters
 
 # the same regex tokenizer the SQL-checkable analytics operators use
 TOKEN_SPLIT = "[^a-z0-9]+"
@@ -120,65 +116,3 @@ def sql_score_pairs(
         .join(sig_b, "b")
         .select("a", "b", F.round(jac, 6).alias("jaccard"))
     )
-
-
-@dataclass
-class SqlPipelineResult:
-    signatures: DataFrame
-    bands: DataFrame
-    pairs: DataFrame
-    edges: DataFrame
-    resolved: DataFrame
-
-
-def run_sql_pipeline(
-    spark: SparkSession,
-    docs: DataFrame,
-    cfg: DedupeConfig | None = None,
-    stop_after: str | None = None,
-) -> SqlPipelineResult:
-    """The full chain in SQL-expressible mode, reusing the shared blocking /
-    pairing / clustering / resolve operators.
-
-    Pair topology is forced to ``all_pairs`` regardless of the incoming
-    config: the DuckDB oracle's ``cand`` CTE defines the candidate set as
-    ALL distinct band-colliding pairs, and ``all_pairs`` is the topology
-    that computes exactly that set (structurally, for every bucket up to
-    ``hot_band_cap`` — the windowless capped+star over-cap branch has
-    its own hash-head oracle, ``lsh_sql_pairs_capped``). Running the checked
-    chain under the chain_star default would make a green hash an accident
-    of fixture density: chain_star provably omits pairs in buckets of ≥ 4
-    docs. chain_star keeps its own driver query (``lsh_sql_pairs_chain``)
-    whose oracle mirrors its lag/first window math exactly.
-    """
-    import dataclasses
-
-    from ..cache import track
-
-    cfg = cfg or DedupeConfig()
-    cfg = dataclasses.replace(cfg, pair_topology="all_pairs")
-    cfg.validate()
-    sigs = track(sql_sketch(docs, cfg))
-    if stop_after == "signatures":
-        return SqlPipelineResult(sigs, None, None, None, None)
-    # bands has 2-3 consumers under all_pairs (the capped+star stats pass
-    # plus the cold/hot branches) — same persistence rationale as the
-    # parity pipeline (plans/pipeline.py multi_consumer set)
-    bands = track(sql_bands(sigs, cfg))
-    if stop_after == "bands":
-        return SqlPipelineResult(sigs, bands, None, None, None)
-    pairs = candidate_pairs(bands, cfg)
-    if stop_after == "pairs":
-        return SqlPipelineResult(sigs, bands, pairs, None, None)
-    edges = sql_score_pairs(pairs, sigs, cfg).filter(
-        F.col("jaccard") >= F.lit(cfg.threshold)
-    )
-    if stop_after == "edges":
-        return SqlPipelineResult(sigs, bands, pairs, edges, None)
-    clusters = connected_components(
-        edges.select("a", "b"),
-        max_iterations=cfg.cc_max_iterations,
-        distinct_pairs=True,
-    )
-    resolved = resolve_clusters(docs, clusters, cfg)
-    return SqlPipelineResult(sigs, bands, pairs, edges, resolved)

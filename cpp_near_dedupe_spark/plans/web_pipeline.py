@@ -16,7 +16,7 @@ lang)``:
              collapses newlines, so the C4 line-level filter becomes
              sentence-level here; ``boiler_min_docs`` defaults high
              because at web scale only truly-global chrome should go)
-        ─6─▶ near-duplicate dedupe  (plans/sql_mode md5 chain keyed by
+        ─6─▶ near-duplicate dedupe  (run_pipeline md5 family keyed by
              canonical url; min-url representative)
         ─7─▶ benchmark decontamination (decontamination.ngram_contamination
              against a caller-supplied eval corpus; skipped when absent)
@@ -57,7 +57,7 @@ from ..operators.pii import pii_scrub_expr
 from ..operators.quality_rules import gopher_passes
 from ..operators.text_analysis import remove_repeated_lines
 from ..operators.urls import canonicalize_url
-from .sql_mode import run_sql_pipeline
+from .pipeline import run_pipeline
 
 STAGES = (
     "input",
@@ -113,12 +113,17 @@ def clean_corpus_stages(
 
     # _pii_hit is computed HERE (one codegen pass, persisted with the
     # stage) so the report's "rows the scrub changed" count needs neither
-    # a join back to s3 nor a second extract_text evaluation (r6)
+    # a join back to s3 nor a second extract_text evaluation (r6). The
+    # scrub runs once: CollapseProject does not re-inline _scrubbed, which
+    # the outer select references twice
+    scrubbed = s3.select(
+        "canonical_url", "text", pii_scrub_expr("text").alias("_scrubbed")
+    )
     s4 = track(
-        s3.select(
+        scrubbed.select(
             "canonical_url",
-            pii_scrub_expr("text").alias("text"),
-            (pii_scrub_expr("text") != F.col("text")).alias("_pii_hit"),
+            F.col("_scrubbed").alias("text"),
+            (F.col("_scrubbed") != F.col("text")).alias("_pii_hit"),
         )
     )
 
@@ -140,7 +145,7 @@ def clean_corpus_stages(
     dedupe_in = s5.select(
         F.col("canonical_url").alias("doc_id"), "text"
     )
-    resolved = run_sql_pipeline(spark, dedupe_in, cfg).resolved
+    resolved = run_pipeline(spark, dedupe_in, cfg, family="sql").resolved
     s6 = track(
         resolved.filter(F.col("is_kept"))
         .select(F.col("doc_id").alias("canonical_url"))

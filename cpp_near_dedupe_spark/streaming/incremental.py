@@ -32,33 +32,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DedupeConfig
-from ..operators.sketch_op import sketch_documents
-from ..operators.blocking import explode_bands
 from ..operators.pairs import candidate_pairs
-from ..operators.scoring import score_pairs
 from ..operators.clustering import connected_components
 from ..operators.resolve import resolve_clusters
-
-
-def _family_fns(family: str):
-    """(sketch, bands, score) function triple for a hash family.
-
-    ``parity`` is the production family (XXH64 over the reference
-    tokenizer's UTF-16 bytes — bit-equal to the reference, not
-    SQL-expressible). ``sql`` is the md5 family of plans/sql_mode.py:
-    identical pipeline topology over hashes BOTH Spark and DuckDB compute,
-    which is what lets the driver hash-verify the incremental semantics
-    end-to-end (the ``incremental_sql_dedupe`` oracle replays the same
-    batch-sequential pass in SQL). Everything downstream of the triple —
-    candidate join, state store, batch ordering — is the SAME code either
-    way, so a green sql-family row verifies the shared machinery."""
-    if family == "parity":
-        return sketch_documents, explode_bands, score_pairs
-    if family == "sql":
-        from ..plans.sql_mode import sql_bands, sql_score_pairs, sql_sketch
-
-        return sql_sketch, sql_bands, sql_score_pairs
-    raise ValueError(f"unknown hash family {family!r} (use 'parity' or 'sql')")
+from ..plans.pipeline import hash_family
 
 
 class SignatureState:
@@ -263,11 +240,15 @@ def dedupe_increment(
     X < Y with X~Y, where X matches state but Y does not, the default
     drops both (Y loses to X within-batch, X loses to state) while the
     reference keeps Y (its only match X was never retained) — pinned in
-    tests/test_greedy.py."""
+    tests/test_greedy.py.
+
+    ``family`` selects the hash family and the rules its oracle fixes
+    (plans/pipeline.py ``FAMILIES``)."""
     from ..cache import track
 
+    fam = hash_family(family)
+    cfg = fam.config(cfg)
     id_col = cfg.id_col
-    sketch_fn, bands_fn, score_fn = _family_fns(family)
 
     # multi-consumer intermediates: the signatures feed the within-batch
     # scoring, the state scoring, and the state append; the bands feed
@@ -276,17 +257,17 @@ def dedupe_increment(
     # the full sketch of the batch — 3-4 extra corpus passes per epoch at
     # any scale. Registered with the session cache registry; the caller
     # releases after materializing the batch (cache.py contract).
-    sigs_new = track(sketch_fn(new_docs, cfg))
-    bands_new = track(bands_fn(sigs_new, cfg))
+    sigs_new = track(fam.sketch(new_docs, cfg))
+    bands_new = track(fam.bands(sigs_new, cfg))
 
     if strict_order:
         return _dedupe_increment_strict(
-            spark, new_docs, sigs_new, bands_new, state, cfg, score_fn
+            spark, new_docs, sigs_new, bands_new, state, cfg, fam.score
         )
 
     # 1. dedupe the batch against itself (full pipeline semantics)
     pairs_in = candidate_pairs(bands_new, cfg)
-    edges_in = score_fn(pairs_in, sigs_new, cfg).filter(
+    edges_in = fam.score(pairs_in, sigs_new, cfg).filter(
         F.col("jaccard") >= F.lit(cfg.threshold)
     )
     clusters = connected_components(
@@ -306,29 +287,13 @@ def dedupe_increment(
     # 2. score batch survivors against the retained state (reference
     # semantics: incoming doc vs retained uniques sharing >=1 band)
     if state.exists():
-        sigs_kept = sigs_new.join(kept_ids, id_col, "left_semi")
-        bands_kept = bands_new.join(kept_ids, id_col, "left_semi")
-        cand = (
-            bands_kept.select("band_id", "band_key", F.col(id_col).alias("a"))
-            .join(
-                state.bands().select("band_id", "band_key", F.col(id_col).alias("b")),
-                ["band_id", "band_key"],
-            )
-            # a != b: the state dir is re-listed on every (re)computation of
-            # the returned DataFrame, so after append() it contains this
-            # batch's own survivors — without the guard a lazy consumer
-            # collecting post-append would match each survivor against
-            # itself (J=1.0) and drop it. Survivor-vs-survivor pairs are
-            # harmless: they already passed within-batch dedupe (J < thresh).
-            .filter(F.col("a") != F.col("b"))
-            .select("a", "b")
-            .distinct()
+        dup_ids = _state_matches(
+            state,
+            sigs_new.join(kept_ids, id_col, "left_semi"),
+            bands_new.join(kept_ids, id_col, "left_semi"),
+            cfg,
+            fam.score,
         )
-        all_sigs = sigs_kept.unionByName(state.signatures().select(sigs_kept.columns))
-        matches = score_fn(cand, all_sigs, cfg).filter(
-            F.col("jaccard") >= F.lit(cfg.threshold)
-        )
-        dup_ids = matches.select(F.col("a").alias(id_col)).distinct()
         # final survivors = within-batch keepers minus state matches; one
         # slim persisted id relation shared by the appends and the return
         survivor_ids = track(kept_ids.join(dup_ids, id_col, "left_anti"))
@@ -343,6 +308,40 @@ def dedupe_increment(
     return new_docs.join(survivor_ids, id_col, "left_semi")
 
 
+def _state_matches(
+    state: SignatureState,
+    sigs: DataFrame,
+    bands: DataFrame,
+    cfg: DedupeConfig,
+    score_fn,
+) -> DataFrame:
+    """Ids of the (sigs, bands) docs that share a band with a retained
+    state doc and score jaccard >= threshold against it (reference
+    semantics: incoming doc vs retained uniques sharing >=1 band)."""
+    id_col = cfg.id_col
+    cand = (
+        bands.select("band_id", "band_key", F.col(id_col).alias("a"))
+        .join(
+            state.bands().select("band_id", "band_key", F.col(id_col).alias("b")),
+            ["band_id", "band_key"],
+        )
+        # a != b: the state dir is re-listed on every (re)computation of
+        # the caller's returned DataFrame, so after append() it contains
+        # this batch's own survivors — without the guard a lazy consumer
+        # collecting post-append would match each survivor against itself
+        # (J=1.0) and drop it. Survivor-vs-survivor pairs are harmless:
+        # they already passed within-batch dedupe (J < thresh).
+        .filter(F.col("a") != F.col("b"))
+        .select("a", "b")
+        .distinct()
+    )
+    all_sigs = sigs.unionByName(state.signatures().select(sigs.columns))
+    matches = score_fn(cand, all_sigs, cfg).filter(
+        F.col("jaccard") >= F.lit(cfg.threshold)
+    )
+    return matches.select(F.col("a").alias(id_col)).distinct()
+
+
 def _dedupe_increment_strict(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -350,7 +349,7 @@ def _dedupe_increment_strict(
     bands_new: DataFrame,
     state: SignatureState,
     cfg: DedupeConfig,
-    score_fn=score_pairs,
+    score_fn,
 ) -> DataFrame:
     """strict_order=True body: state-match first, then arrival-order greedy
     over the remaining docs (see dedupe_increment docstring for the proof
@@ -362,31 +361,13 @@ def _dedupe_increment_strict(
 
     live_docs = new_docs
     if state.exists():
-        cand = (
-            bands_new.select("band_id", "band_key", F.col(id_col).alias("a"))
-            .join(
-                state.bands().select("band_id", "band_key", F.col(id_col).alias("b")),
-                ["band_id", "band_key"],
-            )
-            # same lazy-recompute guard as the default path: after append()
-            # the state dir contains this batch's own survivors
-            .filter(F.col("a") != F.col("b"))
-            .select("a", "b")
-            .distinct()
-        )
-        all_sigs = sigs_new.unionByName(
-            state.signatures().select(sigs_new.columns)
-        )
-        matches = score_fn(cand, all_sigs, cfg).filter(
-            F.col("jaccard") >= F.lit(cfg.threshold)
-        )
         # slim persisted id relation: the state-dropped set feeds the
         # live-docs anti-join whose result is consumed twice below (band
         # restriction + the greedy doc list) — unpersisted, the whole
         # state-scoring join re-ran per consumer (r6, same rationale as
         # the default path's survivor-id persist)
         state_dropped = track(
-            matches.select(F.col("a").alias(id_col)).distinct()
+            _state_matches(state, sigs_new, bands_new, cfg, score_fn)
         )
         live_docs = new_docs.join(state_dropped, id_col, "left_anti")
 

@@ -166,10 +166,10 @@ def test_chained_corpus_pins_greedy_vs_cc_divergence(spark):
     real pipeline edges."""
     import __spark_entry__ as em
     from cpp_near_dedupe_spark.operators.clustering import connected_components
-    from cpp_near_dedupe_spark.plans.sql_mode import run_sql_pipeline
+    from cpp_near_dedupe_spark.plans.pipeline import run_pipeline
 
     docs = em._chain_docs(spark, "/root/testdata/sf0.01")
-    res = run_sql_pipeline(spark, docs, em.CFG, stop_after="edges")
+    res = run_pipeline(spark, docs, em.CFG, stop_after="edges", family="sql")
     edges = res.edges.select("a", "b").cache()
     edge_list = [(r.a, r.b) for r in edges.collect()]
     ids = [r.doc_id for r in docs.select("doc_id").collect()]

@@ -127,23 +127,6 @@ def test_sketch_batch_matches_oracle():
         assert list(map(int, got)) == sketch_oracle(text)
 
 
-def test_sketch_arrow_batch_matches_oracle():
-    from cpp_near_dedupe_spark.functions.sketch_arrow import sketch_arrow_batch
-
-    rng = random.Random(11)
-    vocab = ["alpha", "beta", "γamma", "δ", "слово", "数据", "x1"]
-    texts = ["", None, "one two three four five", "💩 a b c d e f", "", "t"]
-    texts += [" ".join(rng.choices(vocab, k=rng.randrange(0, 200))) for _ in range(30)]
-    enc = [(t or "").encode("utf-8") for t in texts]
-    data = np.frombuffer(b"".join(enc), dtype=np.uint8)
-    offs = np.zeros(len(enc) + 1, dtype=np.int64)
-    np.cumsum([len(e) for e in enc], out=offs[1:])
-    vals, soffs = sketch_arrow_batch(data.copy(), offs)
-    for i, t in enumerate(texts):
-        got = [int(v) for v in vals[soffs[i] : soffs[i + 1]]]
-        assert got == sketch_oracle(t), (i, repr(t)[:40])
-
-
 def test_sketch_order_sensitivity():
     # shingles are ordered windows: word order changes the sketch
     a = sketch_oracle("one two three four five six seven")

@@ -252,12 +252,15 @@ def test_greedy_component_cache_drains(spark):
     edges = spark.createDataFrame(
         pd.DataFrame({"a": [0, 1], "b": [1, 2]}), "a long, b long"
     )
-    out = greedy_resolve(docs, edges, CFG)
-    n = out.count()
-    assert n == 6
-    assert tracked_count() >= 1  # the tagged persist is registered
-    release_all()
-    assert tracked_count() == 0
+    try:
+        out = greedy_resolve(docs, edges, CFG)
+        n = out.count()
+        assert n == 6
+        assert tracked_count() >= 1  # the tagged persist is registered
+        release_all()
+        assert tracked_count() == 0
+    finally:
+        release_all()
 
 
 def test_resolve_and_output(spark):

@@ -165,6 +165,27 @@ def test_resume_from_checkpoint(spark, pages_600, tmp_path):
     stages = {r.stage for r in metrics.select("stage").distinct().collect()}
     assert {"signatures", "bands", "pairs", "edges", "clusters", "resolved"} <= stages
 
+    # the hash family is part of the fingerprint: a sql run over the same
+    # dir and input token never resumes the parity checkpoint
+    sig_success = os.path.join(ckpt, "signatures", "_SUCCESS")
+    run_pipeline(
+        spark, docs, CFG, checkpoint_dir=ckpt, input_token="t1",
+        stop_after="pairs", family="sql",
+    )
+    sql_sig_mtime = os.path.getmtime(sig_success)
+    assert sql_sig_mtime != sig_mtime
+
+    # sql prefix + resumed completion == a fresh sql run without checkpoint
+    res_sql = run_pipeline(
+        spark, docs, CFG, checkpoint_dir=ckpt, input_token="t1", family="sql"
+    )
+    assert os.path.getmtime(sig_success) == sql_sig_mtime
+    fresh_sql = run_pipeline(spark, docs, CFG, family="sql")
+    a = res_sql.resolved.toPandas().sort_values("doc_id").reset_index(drop=True)
+    b = fresh_sql.resolved.toPandas().sort_values("doc_id").reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b)
+    assert not b.is_kept.all()  # the sql chain finds duplicates here too
+
     # config change invalidates the cache
     cfg2 = DedupeConfig(id_col="doc_id", text_col="text", order_col="warc_ts", threshold=0.8)
     run_pipeline(spark, docs, cfg2, checkpoint_dir=ckpt, input_token="t1", stop_after="signatures")

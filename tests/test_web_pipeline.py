@@ -123,3 +123,19 @@ def test_clean_corpus_final_schema(spark):
     out = clean_corpus(spark, _pages(spark, rows))
     assert out.columns == ["canonical_url", "text"]
     assert out.count() == 1
+
+
+def test_pii_scrub_evaluated_once(spark):
+    """The persisted s4 stage derives both ``text`` and ``_pii_hit`` from
+    one scrub: each scrub pattern appears once in its optimized plan (the
+    outer projection must not re-inline the scrub expression)."""
+    from cpp_near_dedupe_spark.cache import release_all
+    from cpp_near_dedupe_spark.operators.pii import _PASSES
+
+    try:
+        st = _stages(spark, _pages(spark, [_page("https://a.example.com/x", GOOD)]))
+        cached = st["pii_scrub"]._jdf.queryExecution().optimizedPlan()
+        plan = cached.cacheBuilder().logicalPlan().toString()
+        assert [plan.count(token) for _, token, _ in _PASSES] == [1, 1, 1]
+    finally:
+        release_all()
