@@ -24,7 +24,10 @@ Two implementations:
   position-local, so iterating i (query position) and j (candidate
   position) with batch-wide boolean masks reproduces the scalar semantics
   exactly; equality is pinned by a hypothesis test against the scalar and
-  by the DuckDB ``jaro_winkler_similarity`` driver oracle.
+  by the DuckDB ``jaro_winkler_similarity`` driver oracle. Pairs longer
+  than ``_BATCH_LEN_CAP`` bytes leave the matrices and are matched one
+  pair at a time by ``_first_fit_by_byte`` (linear, property-tested
+  against the scalar loop).
 """
 
 from __future__ import annotations
@@ -36,7 +39,47 @@ _PREFIX_WEIGHT = 0.1
 _BOOST_THRESHOLD = 0.7
 
 
-def jaro(s1: str, s2: str) -> float:
+def _first_fit_literal(a: np.ndarray, b: np.ndarray, window: int) -> np.ndarray:
+    # the spec: for each byte of a, the first untaken equal byte of b
+    # inside the match window; a_match[i] = its position, -1 if none
+    l1, l2 = a.size, b.size
+    b_taken = np.zeros(l2, dtype=bool)
+    a_match = np.full(l1, -1, dtype=np.int64)
+    for i in range(l1):
+        lo = max(0, i - window)
+        hi = min(l2, i + window + 1)
+        for j in range(lo, hi):
+            if not b_taken[j] and a[i] == b[j]:
+                b_taken[j] = True
+                a_match[i] = j
+                break
+    return a_match
+
+
+def _first_fit_by_byte(a: np.ndarray, b: np.ndarray, window: int) -> np.ndarray:
+    """Same matches as ``_first_fit_literal`` in O(|a| + |b|). Only a's
+    bytes of value c can take b's positions of value c, and the window's
+    lower bound only moves right, so each byte value's positions in b are
+    taken in increasing order: one pointer per byte value into its sorted
+    position list, skipping positions that fell below the window, finds
+    the first untaken match."""
+    order = np.argsort(b, kind="stable")
+    starts = np.searchsorted(b[order], np.arange(257)).tolist()
+    pos = order.tolist()
+    ptr = starts[:256]
+    a_match = np.full(a.size, -1, dtype=np.int64)
+    for i, c in enumerate(a.tolist()):
+        k, end = ptr[c], starts[c + 1]
+        while k < end and pos[k] < i - window:
+            k += 1
+        if k < end and pos[k] <= i + window:
+            a_match[i] = pos[k]
+            k += 1
+        ptr[c] = k
+    return a_match
+
+
+def _jaro(s1: str, s2: str, first_fit) -> float:
     # operates on UTF-8 BYTES, not codepoints — matching DuckDB (and most
     # C implementations); for the ASCII identity strings JW is meant for,
     # the two definitions coincide
@@ -47,19 +90,8 @@ def jaro(s1: str, s2: str) -> float:
         return 0.0
     if l1 == l2 and np.array_equal(a, b):
         return 1.0
-    window = max(0, max(l1, l2) // 2 - 1)
-    b_taken = np.zeros(l2, dtype=bool)
-    a_match = np.full(l1, -1, dtype=np.int64)
-    m = 0
-    for i in range(l1):
-        lo = max(0, i - window)
-        hi = min(l2, i + window + 1)
-        for j in range(lo, hi):
-            if not b_taken[j] and a[i] == b[j]:
-                b_taken[j] = True
-                a_match[i] = j
-                m += 1
-                break
+    a_match = first_fit(a, b, max(0, max(l1, l2) // 2 - 1))
+    m = int(np.count_nonzero(a_match >= 0))
     if m == 0:
         return 0.0
     # transpositions: matched chars of a, in order, vs matched chars of b
@@ -69,8 +101,7 @@ def jaro(s1: str, s2: str) -> float:
     return (m / l1 + m / l2 + (m - t) / m) / 3.0
 
 
-def jaro_winkler(s1: str, s2: str) -> float:
-    j = jaro(s1, s2)
+def _winkler(s1: str, s2: str, j: float) -> float:
     if j > _BOOST_THRESHOLD:
         b1, b2 = s1.encode("utf-8"), s2.encode("utf-8")
         cap = min(_PREFIX_CAP, len(b1), len(b2))
@@ -79,6 +110,14 @@ def jaro_winkler(s1: str, s2: str) -> float:
             L += 1
         j += L * _PREFIX_WEIGHT * (1.0 - j)
     return j
+
+
+def jaro(s1: str, s2: str) -> float:
+    return _jaro(s1, s2, _first_fit_literal)
+
+
+def jaro_winkler(s1: str, s2: str) -> float:
+    return _winkler(s1, s2, jaro(s1, s2))
 
 
 def _pad_codes(strs: list[str], pad: int) -> tuple[np.ndarray, np.ndarray]:
@@ -99,9 +138,9 @@ def _pad_codes(strs: list[str], pad: int) -> tuple[np.ndarray, np.ndarray]:
 # byte length above which a pair leaves the batch-matrix path: the kernel
 # pads the WHOLE batch to the longest string, so one megabyte outlier in a
 # 10k-row batch would allocate O(n·Lmax) int16 matrices (multi-GB) and do
-# O(Lmax·Wmax) work for every pair. Long outliers take the scalar loop,
-# which degrades gracefully per-pair. JW is for short identity strings;
-# 512 B covers urls/titles/names with huge margin.
+# O(Lmax·Wmax) work for every pair. Long outliers take the per-pair
+# byte-pointer matcher instead, linear in the pair's length. JW is for
+# short identity strings; 512 B covers urls/titles/names with huge margin.
 _BATCH_LEN_CAP = 512
 
 
@@ -117,7 +156,7 @@ def jaro_winkler_batch(left: list[str], right: list[str]) -> np.ndarray:
         if len(enc_l[i]) > _BATCH_LEN_CAP or len(enc_r[i]) > _BATCH_LEN_CAP
     ]
     if long_idx:
-        # split: long outliers via the scalar spec, the rest batched —
+        # split: long outliers one pair at a time, the rest batched —
         # the batch matrices stay bounded at n × _BATCH_LEN_CAP
         out = np.empty(n, dtype=np.float64)
         long_set = set(long_idx)
@@ -127,7 +166,8 @@ def jaro_winkler_batch(left: list[str], right: list[str]) -> np.ndarray:
                 [left[i] for i in short_idx], [right[i] for i in short_idx]
             )
         for i in long_idx:
-            out[i] = jaro_winkler(left[i] or "", right[i] or "")
+            s1, s2 = left[i] or "", right[i] or ""
+            out[i] = _winkler(s1, s2, _jaro(s1, s2, _first_fit_by_byte))
         return out
     a, la = _pad_codes(left, pad=256)
     b, lb = _pad_codes(right, pad=257)

@@ -79,10 +79,6 @@ _U = np.uint64
 _uP1, _uP2, _uP3, _uP4, _uP5 = (_U(_P1), _U(_P2), _U(_P3), _U(_P4), _U(_P5))
 
 
-def _vrotl(x: np.ndarray, r: int) -> np.ndarray:
-    return (x << _U(r)) | (x >> _U(64 - r))
-
-
 class _Scratch:
     """Grow-only reusable uint64 work buffers.
 

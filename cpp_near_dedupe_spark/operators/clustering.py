@@ -1,24 +1,35 @@
 """Transitive duplicate clustering: connected components over dupe edges.
 
-The reference's greedy keep-first pass (`/root/reference/CPPDeduper/
-ComparerThread.h:271-414`) is inherently sequential — each doc is compared
+The reference's greedy keep-first pass (CPPDeduper
+`ComparerThread.h:271-414`) is inherently sequential — each doc is compared
 against the retained-unique set built so far. The order-independent,
 distributed equivalent (SURVEY.md §2 C1) is connected components over the
-verified duplicate edges, implemented as the alternating large-star /
-small-star iteration of Kiveris et al., "Connected Components in MapReduce
-and Beyond" (SOCC 2014), expressed entirely as DataFrame joins:
+verified duplicate edges, labelled with each component's minimum node id
+(which doubles as the cluster id).
 
-* large-star: for each node u, connect every strictly-larger neighbor to
-  the minimum of N(u) ∪ {u};
-* small-star: for each node u (edges directed larger→smaller), connect all
-  smaller neighbors and u itself to their minimum.
+One rule, decided by the edge count of the canonicalized input:
 
-Both steps preserve connectivity and strictly reduce the potential; at
-convergence the edge set is a star forest rooted at each component's
-minimum id — which doubles as the cluster id. Converges in O(log²) rounds
-(in practice 3–5 for near-dupe clusters, which have tiny diameters).
+* **at or below** ``_LOCAL_EDGE_CAP`` the whole graph is solved in ONE
+  ``coalesce(1).mapInPandas`` task by a whole-array numpy union-find
+  (min-root hooking + pointer jumping) — the in-task vectorized style of
+  "Accelerating Python UDFs in Vectorized Query Execution" (CIDR 2022).
+  The dedupe graphs this engine builds sit far under the cap, so CC costs
+  the checkpoint + count job and the finishing task, whatever the depth;
+* **above** the cap, the alternating large-star / small-star rounds of
+  Kiveris et al., "Connected Components in MapReduce and Beyond" (SOCC
+  2014), run as groupBy + join-back DataFrame plans until the edge count
+  drops to the cap (then the residual forest finishes in one task) or the
+  edge set reaches a fixpoint (a star forest rooted at each minimum):
 
-Each iteration is ``localCheckpoint``-ed: iterative self-joins otherwise
+  - large-star: for each node u, connect every strictly-larger neighbor to
+    the minimum of N(u) ∪ {u};
+  - small-star: for each node u (edges directed larger→smaller), connect
+    all smaller neighbors and u itself to their minimum.
+
+  Both steps preserve connectivity and the node set, so a residual forest
+  has the same components as the input.
+
+Every edge set is ``localCheckpoint``-ed: iterative self-joins otherwise
 grow an exponential lineage that Catalyst re-analyzes every round. On a
 cluster, checkpointing to the Iceberg/parquet stage directory every few
 rounds also bounds recomputation on executor loss.
@@ -26,8 +37,17 @@ rounds also bounds recomputation on executor loss.
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# max edges the one finishing task holds: u/v plus the union-find arrays
+# are ~100 MB of numpy at 1M edges, the same bound as greedy's
+# ``component_cap``
+_LOCAL_EDGE_CAP = 1_000_000
 
 
 def _canonicalize(edges: DataFrame, distinct_pairs: bool = False) -> DataFrame:
@@ -41,73 +61,29 @@ def _canonicalize(edges: DataFrame, distinct_pairs: bool = False) -> DataFrame:
     return out if distinct_pairs else out.distinct()
 
 
-# Both star steps need "min over the node's neighborhood" attached to every
-# edge row. Two physical formulations, chosen PER ROUND from the edge
-# count the convergence checksum already measures (zero extra jobs):
-#
-# * window (partitionBy u): one wide stage per star — cheapest, but a
-#   hub's ENTIRE adjacency lands in one task (AQE cannot split window
-#   partitions), and the pair generators' star topology deliberately
-#   MANUFACTURES mega-hubs (the bucket minimum of a 10⁷-row boilerplate
-#   bucket has degree 10⁷). Safe exactly when the TOTAL edge count bounds
-#   every possible hub to a fine-grained task (≤ _WINDOW_EDGE_CAP).
-# * groupBy + join-back: the aggregation collapses map-side (tiny
-#   shuffle) and the join on the skewed key is AQE-skew-splittable — the
-#   at-scale formulation; measured ~+8% per pipeline run at sf0.1, which
-#   the adaptive choice avoids paying on small inputs. Since the edge set
-#   SHRINKS over rounds, at-scale runs also flip to the cheap window plan
-#   for their small residual rounds.
-#
-# Interleaved A/B at sf0.1 (best-of-4 warm): window 5.09/5.35 s vs
-# groupBy+join 5.70/5.81 s end-to-end pipeline (BENCH/BASELINE.md).
-
-_WINDOW_EDGE_CAP = 1_000_000  # max rows a single window task may see
-
-
-def _large_star(edges: DataFrame, use_window: bool = False) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     # No distinct here: duplicate edges don't change any per-node min, and
     # the round's small_star ends in the canonicalizing distinct — one
     # dedup shuffle per round instead of two. (Kiveris et al. dedup both
     # steps only to bound intermediate growth; a star step inflates the
-    # edge list ≤2× transiently, which the next shuffle absorbs.)
+    # edge list ≤2× transiently, which the next shuffle absorbs.) The
+    # neighborhood minimum is a map-side-combined groupBy joined back on
+    # the node: the join on a hub key is AQE-skew-splittable, where a
+    # per-node window would put a mega-hub's whole adjacency in one task.
     sym = edges.select("u", "v").unionByName(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    if use_window:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("u")
-        m = F.least(F.min("v").over(w), F.col("u"))
-        return (
-            sym.withColumn("m", m)
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-        )
     mins = sym.groupBy("u").agg(F.min("v").alias("mv"))
     return (
         sym.join(mins, "u")
         .filter(F.col("v") > F.col("u"))
-        .select(
-            F.col("v").alias("u"),
-            F.least(F.col("mv"), F.col("u")).alias("v"),
-        )
+        .select(F.col("v").alias("u"), F.least("mv", "u").alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
 
 
-def _small_star(edges: DataFrame, use_window: bool = False) -> DataFrame:
+def _small_star(edges: DataFrame) -> DataFrame:
     # edges are canonical u > v, so min(N_small(u) ∪ {u}) = min(v)
-    if use_window:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("u")
-        with_min = edges.withColumn("m", F.min("v").over(w))
-        moved = with_min.select(F.col("v").alias("u"), F.col("m").alias("v")).filter(
-            F.col("u") != F.col("v")
-        )
-        selfe = with_min.select("u", F.col("m").alias("v"))
-        return moved.unionByName(selfe).distinct()
     mins = edges.groupBy("u").agg(F.min("v").alias("m"))
     with_min = edges.join(mins, "u")
     moved = with_min.select(F.col("v").alias("u"), F.col("m").alias("v")).filter(
@@ -126,6 +102,51 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
+def _min_labels(u: np.ndarray, v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Edge arrays → (node ids, minimum id of each node's component). Ids
+    may be integers or strings (object arrays): np.unique sorts both the
+    way Spark's min() orders them."""
+    ids, idx = np.unique(np.concatenate([u, v]), return_inverse=True)
+    a, b = idx[: u.size], idx[u.size :]
+    # dense indices follow id order, so the smallest root index is the
+    # smallest id; every entry of ``root`` is a root between hook passes
+    root = np.arange(ids.size)
+    ra, rb = a, b
+    while not np.array_equal(ra, rb):
+        # hook each edge's larger root under its smaller one (a root hooked
+        # by several edges keeps the smallest), then pointer-jump until
+        # every node points straight at its root
+        np.minimum.at(root, np.maximum(ra, rb), np.minimum(ra, rb))
+        while not np.array_equal(root[root], root):
+            root = root[root]
+        ra, rb = root[a], root[b]
+    return ids, ids[root]
+
+
+def _local_components(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body over ONE partition: the whole (u, v) edge set →
+    (id, cluster_id). An empty edge set arrives as no batches at all."""
+    parts = list(batches)
+    if parts:
+        e = pd.concat(parts)
+        ids, labels = _min_labels(e["u"].to_numpy(), e["v"].to_numpy())
+        yield pd.DataFrame({"id": ids, "cluster_id": labels})
+
+
+def _forest_components(forest: DataFrame) -> DataFrame:
+    """A converged star forest → (id, cluster_id): each non-root u points
+    at its root; roots point at themselves implicitly. min() guards the
+    (impossible by construction, cheap to enforce) case of duplicate
+    memberships."""
+    members = forest.groupBy("u").agg(F.min("v").alias("cluster_id"))
+    roots = forest.select(F.col("v").alias("u")).distinct().join(
+        members.select("u"), "u", "left_anti"
+    ).select("u", F.col("u").alias("cluster_id"))
+    return members.unionByName(roots).select(
+        F.col("u").alias("id"), "cluster_id"
+    )
+
+
 def connected_components(
     edges: DataFrame, max_iterations: int = 20, distinct_pairs: bool = False
 ) -> DataFrame:
@@ -134,67 +155,30 @@ def connected_components(
     any edge are singletons and are absent (callers treat missing as
     cluster_id = own id). ``distinct_pairs``: see ``_canonicalize``.
 
-    Every iteration ends in an eager localCheckpoint: each star step
-    references its input 3-4 times, so an untruncated logical plan grows
-    exponentially (~4^rounds relation copies) and OOMs the driver during
-    analysis long before execution — plan truncation here is correctness,
-    not tuning. (On a cluster, substitute reliable checkpoints or per-round
-    table writes for executor-loss tolerance.)
+    The canonicalized input is checkpointed and counted in one job. At or
+    below ``_LOCAL_EDGE_CAP`` edges the graph finishes in one task.
+    Above it, each star round (large + small) is one lazy localCheckpoint
+    materialized by its checksum job — each star step references its input
+    3-4 times, so an untruncated logical plan grows exponentially and OOMs
+    the driver during analysis; plan truncation here is correctness, not
+    tuning. Rounds stop when the count drops to the cap (local finish) or
+    two successive checksums are equal (each star round strictly decreases
+    the Kiveris potential, so the edge set is a fixpoint). More than
+    ``2 * max_iterations`` star rounds raise.
     """
-    # lazy localCheckpoint + immediate checksum action = ONE Spark job per
-    # iteration that both materializes the checkpoint (truncating the
-    # logical plan before the next round is built on it) and tests
-    # convergence. No separate checksum job on the INPUT (r6): round 1 is
-    # built immediately on the lazy input checkpoint and the first
-    # checksum job materializes both — one driver job saved on every CC
-    # invocation (8 headline queries call this). Convergence detection is
-    # unchanged: two successive equal checksums mean the edge set is a
-    # fixpoint (each star round strictly decreases the Kiveris potential,
-    # so cycles cannot exist); an already-converged input just confirms on
-    # the second job, exactly as before.
     cur = _canonicalize(edges, distinct_pairs).localCheckpoint(eager=False)
-    prev_sum: tuple[int, int] | None = None
-    converged = False
-    # ONE star round (large + small) per checkpoint+checksum job (r6,
-    # second session). The r5/r6 scheme batched TWO rounds per job after
-    # the first, betting that fewer driver actions beat wasted rounds —
-    # but the dedupe graphs this engine builds (fingerprint-collapsed
-    # families, star-routed hot buckets) converge in 1-2 rounds, so the
-    # batched confirm job mostly re-ran no-op rounds: a no-op star round
-    # on the converged forest still shuffles the whole forest. Single-
-    # round jobs do strictly fewer star rounds for any graph converging
-    # in ≤2 rounds and tie at 3; interleaved A/B at sf0.1 (3 reps,
-    # minima): lsh_clusters 5.11 vs 5.96, er_golden_records 4.60 vs
-    # 5.17, pages_dedupe 3.59 vs 4.06, incremental_sql_dedupe 10.07 vs
-    # 11.60, semantic_dedupe_lsh 4.17 vs 4.42 — single wins 5/5. The
-    # loop bound doubles so the ROUND budget (max_iterations counted
-    # round-pairs in the batched scheme) is unchanged for deep chains.
+    seen = _checksum(cur)
     for _ in range(2 * max_iterations):
-        # per-round physical choice from the edge count the previous
-        # checksum already measured (see the formulation comment above).
-        # Round 1 has no measured count yet and uses the scale-safe
-        # groupBy+join form — the first round is the largest one,
-        # exactly where a mega-hub window task would be the hazard.
-        uw = prev_sum is not None and prev_sum[0] <= _WINDOW_EDGE_CAP
-        nxt = _small_star(_large_star(cur, uw), uw).localCheckpoint(eager=False)
-        cur_sum = _checksum(nxt)
-        cur = nxt
-        if cur_sum == prev_sum:
-            converged = True
+        if seen[0] <= _LOCAL_EDGE_CAP:
             break
-        prev_sum = cur_sum
-    if not converged:
+        cur = _small_star(_large_star(cur)).localCheckpoint(eager=False)
+        prev, seen = seen, _checksum(cur)
+        if seen == prev:
+            return _forest_components(cur)
+    if seen[0] > _LOCAL_EDGE_CAP:
         raise RuntimeError(
             "connected_components did not converge in "
             f"{2 * max_iterations} star rounds (max_iterations={max_iterations})"
         )
-    # converged star forest: each non-root u points at its root; roots point
-    # at themselves implicitly. min() guards the (impossible by construction,
-    # cheap to enforce) case of duplicate memberships.
-    members = cur.groupBy("u").agg(F.min("v").alias("cluster_id"))
-    roots = cur.select(F.col("v").alias("u")).distinct().join(
-        members.select("u"), "u", "left_anti"
-    ).select("u", F.col("u").alias("cluster_id"))
-    return members.unionByName(roots).select(
-        F.col("u").alias("id"), "cluster_id"
-    )
+    t = cur.schema["u"].dataType.simpleString()  # ids may be long or string
+    return cur.coalesce(1).mapInPandas(_local_components, f"id {t}, cluster_id {t}")

@@ -522,9 +522,9 @@ def semantic_dedupe(
     ``method``: 'lsh' (default — the 100 TB path: bucketed equi-join
     pair generation with windowless hot-bucket caps) or 'exact' (the
     guarded O(n²) oracle path used by the driver correctness query).
-    Extra kwargs flow to the pair generator. The CC rounds dominate at
-    scale exactly as in the text pipeline and share its one-job-per-
-    round, truncated-lineage engine.
+    Extra kwargs flow to the pair generator. CC is the text pipeline's
+    engine: one task under its edge cap, truncated-lineage star rounds
+    above it.
     """
     from .clustering import connected_components
 

@@ -23,7 +23,8 @@ clustering architecture (the north-star category is entity_resolution):
 
 Every step is either pure built-in Spark SQL expressions or the existing
 Arrow-batched JW kernel — no per-row Python. All joins key on block_key /
-rec_id; the only shuffles are the block-key self-join and the CC rounds.
+rec_id; the only shuffles are the block-key self-join and, above the CC
+edge cap, the CC star rounds.
 
 Dirty-records fixture
 ---------------------

@@ -15,9 +15,9 @@ decision of a doc depends only on docs inside its own weakly-connected
 component, so components are embarrassingly parallel. Two engines:
 
 * **pandas** (default path): connected components over the edge list
-  (operators/clustering.py — O(log n) rounds), then one
-  ``applyInPandas`` per component running the reference's literal
-  sequential per-doc loop in memory. One Spark job decides EVERY
+  (operators/clustering.py — one task for graphs under its edge cap),
+  then one ``applyInPandas`` per component running the reference's
+  literal sequential per-doc loop in memory. One Spark job decides EVERY
   component regardless of its chain depth — a 500-link decision chain
   that costs 500 rounds under the frontier engine is a single in-task
   loop here. Components with more than ``component_cap`` EDGES fall back
@@ -176,6 +176,10 @@ def _component_dropped(
     # re-running the size aggregation in both the probe job and the final
     # job (r6 — the probe was a limit(1).count() whose work the decision
     # branches then repeated).
+    # Plan hazard if ``component_cap`` is ever lowered: ``isin(big_ids)``
+    # inlines every id as a literal into the plan, so thousands of big
+    # components would bloat analysis and codegen — switch to a broadcast
+    # left_anti / left_semi join on ``big`` before shrinking the cap.
     big_ids = [r["comp"] for r in big.collect()]
     small = (
         tagged

@@ -189,10 +189,3 @@ def generate_pages(n_docs: int = 5000, seed: int = 42) -> pd.DataFrame:
 
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-
-def pages_to_spark(spark, pdf: pd.DataFrame, with_labels: bool = False):
-    cols = ["url", "warc_ts", "html", "text", "lang"] + (
-        ["group_id", "kind"] if with_labels else []
-    )
-    return spark.createDataFrame(pdf[cols])

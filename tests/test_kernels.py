@@ -202,8 +202,9 @@ def test_jaccard_batch_matches_oracle():
 
 def test_jaro_winkler_batch_long_outlier_guard():
     """ADVICE r3: one long outlier must not inflate the whole batch's
-    padded matrices — outliers over the length cap take the scalar loop;
-    values must equal the scalar spec either way."""
+    padded matrices — outliers over the length cap take the per-pair
+    byte-pointer matcher, linear in the pair's length. Short pairs must
+    equal the scalar spec; the 100k-byte pairs their closed forms."""
     import numpy as np
 
     from cpp_near_dedupe_spark.functions.jaro_winkler import (
@@ -215,5 +216,13 @@ def test_jaro_winkler_batch_long_outlier_guard():
     left = ["martha", big, "dwayne", "", big]
     right = ["marhta", big[:-1] + "?", "duane", "abc", big]
     got = jaro_winkler_batch(left, right)
-    exp = np.array([jaro_winkler(a, b) for a, b in zip(left, right)])
-    np.testing.assert_allclose(got, exp, rtol=0, atol=1e-12)
+    short = [0, 2, 3]
+    exp = [jaro_winkler(left[i], right[i]) for i in short]
+    np.testing.assert_allclose(got[short], exp, rtol=0, atol=1e-12)
+    # (big, big[:-1] + "?"): every byte but the last matches in place —
+    # m = 100003 of l = 100004 on both sides, t = 0 — then the Winkler
+    # boost over the common prefix "xxxx"
+    m, n = 100_003, 100_004
+    j = (m / n + m / n + 1.0) / 3.0
+    assert got[1] == pytest.approx(j + 4 * 0.1 * (1.0 - j), abs=1e-12)
+    assert got[4] == 1.0

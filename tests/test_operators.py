@@ -1,5 +1,7 @@
 """Spark operator tests: each pipeline stage vs its pure-Python oracle."""
 
+import random
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -189,8 +191,32 @@ def _cc_oracle(n_nodes, edges):
     return {i: find(i) for i in range(n_nodes)}
 
 
-@pytest.mark.parametrize("case", ["chain", "star", "random", "two_cliques"])
-def test_connected_components_vs_union_find(spark, case):
+_CC_CASES = ["chain", "star", "random", "two_cliques", "mega_hub", "empty"]
+
+
+@pytest.mark.parametrize(
+    "case,cap",
+    [pytest.param(c, None, id=c) for c in _CC_CASES]
+    + [pytest.param(c, 0, id=f"{c}-star_rounds") for c in _CC_CASES]
+    + [pytest.param("mega_hub", 400, id="mega_hub-star_then_local")],
+)
+def test_connected_components_vs_union_find(spark, monkeypatch, case, cap):
+    """Every CC path against the pure-Python union-find: the one-task
+    numpy finish (every test graph is under the default cap); with the
+    cap forced to 0, the groupBy + join star rounds to a fixpoint; and
+    with a cap between the input's and the forest's edge counts, star
+    rounds until the count drops to the cap, then the one-task finish."""
+    from cpp_near_dedupe_spark.operators import clustering
+
+    counts = []
+
+    def recorded_checksum(e, checksum=clustering._checksum):
+        counts.append(checksum(e))
+        return counts[-1]
+
+    if cap is not None:
+        monkeypatch.setattr(clustering, "_LOCAL_EDGE_CAP", cap)
+        monkeypatch.setattr(clustering, "_checksum", recorded_checksum)
     rng = np.random.default_rng(17)
     if case == "chain":
         edges = [(i, i + 1) for i in range(30)]
@@ -202,6 +228,15 @@ def test_connected_components_vs_union_find(spark, case):
         edges = [(i, j) for i in range(5) for j in range(i + 1, 5)]
         edges += [(i, j) for i in range(10, 14) for j in range(i + 1, 14)]
         n = 14
+    elif case == "mega_hub":
+        # random edges with duplicates and self-loops, plus a 149-spoke
+        # hub — the shape the star pair topology manufactures
+        r13 = random.Random(13)
+        edges = [(r13.randint(0, 200), r13.randint(0, 200)) for _ in range(600)]
+        edges += [(0, j) for j in range(1, 150)]
+        n = 201
+    elif case == "empty":
+        edges, n = [], 0
     else:
         n = 200
         edges = [
@@ -212,18 +247,42 @@ def test_connected_components_vs_union_find(spark, case):
     df = spark.createDataFrame(pd.DataFrame(edges, columns=["a", "b"]), "a long, b long")
     got = {r.id: r.cluster_id for r in connected_components(df).collect()}
     exp = _cc_oracle(n, edges)
-    nodes_in_edges = {x for e in edges for x in e}
+    nodes_in_edges = {x for a, b in edges if a != b for x in (a, b)}
     for node in nodes_in_edges:
         assert got[node] == exp[node], (case, node)
     assert set(got) == nodes_in_edges
+    if cap:
+        # the input is over the cap and the last star round is under it
+        assert counts[0][0] > cap >= counts[-1][0], counts
 
 
-def test_connected_components_round_budget(spark):
-    """Pins the r6 single-round-per-job convergence loop: the round
-    budget is 2 * max_iterations star rounds (the historical unit was
-    round-pairs), so a graph needing more rounds than a tiny budget
-    raises with the round count in the message, while the same graph
-    converges under the default budget (covered case-by-case above)."""
+@pytest.mark.parametrize("star_rounds", [False, True])
+def test_connected_components_string_ids(spark, monkeypatch, star_rounds):
+    """Ids may be strings (the web pipeline keys docs by url): both paths
+    label each node with its component's lexicographic minimum and keep
+    the string type, and an empty string-keyed edge set stays empty."""
+    from cpp_near_dedupe_spark.operators import clustering
+
+    if star_rounds:
+        monkeypatch.setattr(clustering, "_LOCAL_EDGE_CAP", 0)
+    edges = [("b/2", "a/1"), ("c", "b/2"), ("é", "z"), ("z", "y")]
+    df = spark.createDataFrame(edges, "a string, b string")
+    out = connected_components(df)
+    assert out.schema["id"].dataType.simpleString() == "string"
+    got = {r.id: r.cluster_id for r in out.collect()}
+    assert got == {"a/1": "a/1", "b/2": "a/1", "c": "a/1", "y": "y", "z": "y", "é": "y"}
+    assert connected_components(df.limit(0)).count() == 0
+
+
+def test_connected_components_round_budget(spark, monkeypatch):
+    """Pins the star-round budget and the converged-forest finalize: with
+    the local-finish cap at 0 every graph stays on the star rounds, whose
+    budget is 2 * max_iterations rounds, so a graph needing more rounds
+    than a tiny budget raises with the round count in the message, while
+    the same graph converges under the default budget."""
+    from cpp_near_dedupe_spark.operators import clustering
+
+    monkeypatch.setattr(clustering, "_LOCAL_EDGE_CAP", 0)
     edges = [(i, i + 1) for i in range(30)]
     df = spark.createDataFrame(
         pd.DataFrame(edges, columns=["a", "b"]), "a long, b long"
@@ -233,9 +292,9 @@ def test_connected_components_round_budget(spark):
     with pytest.raises(RuntimeError, match="star rounds"):
         connected_components(df, max_iterations=1)
     # the budget is rounds, not jobs: the same chain converges well
-    # inside the default allowance and matches the union-find oracle
+    # inside the default allowance to one star rooted at 0
     got = {r.id: r.cluster_id for r in connected_components(df).collect()}
-    assert set(got.values()) == {0}
+    assert got == {i: 0 for i in range(31)}
 
 
 def test_greedy_component_cache_drains(spark):
@@ -278,25 +337,3 @@ def test_resolve_and_output(spark):
     kept = dedupe_output(docs, resolved, CFG)
     assert {r.doc_id for r in kept.collect()} == {1, 3, 4}
     assert kept.columns == docs.columns  # full passthrough schema
-
-
-def test_cc_star_formulations_agree_spark(spark):
-    import random
-
-    from cpp_near_dedupe_spark.operators.clustering import (
-        _canonicalize,
-        _large_star,
-        _small_star,
-    )
-
-    rng = random.Random(13)
-    edges = [(rng.randint(0, 200), rng.randint(0, 200)) for _ in range(600)]
-    # include a mega-hub, the case the adaptive gate exists for
-    edges += [(0, j) for j in range(1, 150)]
-    df = _canonicalize(
-        spark.createDataFrame(edges, "a long, b long"), distinct_pairs=False
-    )
-    for step in (_large_star, _small_star):
-        w = {(r.u, r.v) for r in step(df, True).distinct().collect()}
-        g = {(r.u, r.v) for r in step(df, False).distinct().collect()}
-        assert w == g, step.__name__

@@ -1,8 +1,10 @@
 """Hypothesis property tests for the kernels (no Spark)."""
 
+import string
+
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from cpp_near_dedupe_spark.functions import (
     band_keys_oracle,
@@ -98,3 +100,38 @@ def test_jaro_winkler_matches_duckdb(s1, s2):
     assert got == pytest.approx(exp, abs=1e-12), (s1, s2)
     assert jaro_winkler(s2, s1) == pytest.approx(got, abs=1e-12)
     assert 0.0 <= got <= 1.0
+
+
+# both strings share one alphabet: the small ones (a 2-byte and a 3-byte
+# char included) keep matches and transpositions dense, the 64-char one
+# makes matches sparse enough to land on the window edges. 600 chars stay
+# within 2k UTF-8 bytes; the long branch puts most pairs past the
+# 512-byte batch-matrix cap.
+def _jw_text(chars):
+    alphabet = st.sampled_from(chars)
+    return st.one_of(
+        st.text(alphabet=alphabet, max_size=40),
+        st.text(alphabet=alphabet, min_size=300, max_size=600),
+    )
+
+
+_jw_pair = st.sampled_from(["ab", "abcé€", string.ascii_letters + "é€"]).flatmap(
+    lambda chars: st.tuples(_jw_text(chars), _jw_text(chars))
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_jw_pair)
+@example(("bzzz", "ybyy"))  # the only match sits on the window's upper edge
+def test_jaro_first_fit_by_byte_matches_literal(pair):
+    """The long-outlier route of ``jaro_winkler_batch`` (one pointer per
+    byte value) returns exactly the literal first-fit loop's matches, on
+    strings past the batch-matrix length cap as well as short ones."""
+    from cpp_near_dedupe_spark.functions.jaro_winkler import (
+        _first_fit_by_byte,
+        _jaro,
+        jaro,
+    )
+
+    s1, s2 = pair
+    assert _jaro(s1, s2, _first_fit_by_byte) == jaro(s1, s2), pair
