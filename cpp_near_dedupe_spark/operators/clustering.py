@@ -45,8 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # max edges the one finishing task holds: u/v plus the union-find arrays
-# are ~100 MB of numpy at 1M edges, the same bound as greedy's
-# ``component_cap``
+# are ~100 MB of numpy at 1M edges. Greedy resolution uses the same bound
+# for its per-component tasks.
 _LOCAL_EDGE_CAP = 1_000_000
 
 

@@ -14,15 +14,16 @@ set of the duplicate graph — inherently sequential in general, BUT the
 decision of a doc depends only on docs inside its own weakly-connected
 component, so components are embarrassingly parallel. Two engines:
 
-* **pandas** (default path): connected components over the edge list
-  (operators/clustering.py — one task for graphs under its edge cap),
-  then one ``applyInPandas`` per component running the reference's
-  literal sequential per-doc loop in memory. One Spark job decides EVERY
-  component regardless of its chain depth — a 500-link decision chain
-  that costs 500 rounds under the frontier engine is a single in-task
-  loop here. Components with more than ``component_cap`` EDGES fall back
-  to the frontier engine (the edge list is what the task materializes, so
-  it would not fit); real dupe families are stars/cliques orders of
+* **per-component** (every component under the cap): connected
+  components over the edge list (operators/clustering.py — one task for
+  graphs under its edge cap), then one ``applyInPandas`` per component
+  running the reference's literal sequential per-doc loop in memory. One
+  Spark job decides EVERY component regardless of its chain depth — a
+  500-link decision chain that costs 500 rounds under the frontier engine
+  is a single in-task loop here. Components with more EDGES than
+  clustering's ``_LOCAL_EDGE_CAP`` (the same one-task bound) fall back to
+  the frontier engine (the edge list is what the task materializes, so it
+  would not fit); real dupe families are stars/cliques orders of
   magnitude below the cap.
 
 * **frontier** (fallback + cross-check): parallel rounds — each round
@@ -55,8 +56,6 @@ def greedy_resolve(
     edges: DataFrame,
     cfg: DedupeConfig,
     max_rounds: int = 60,
-    engine: str = "auto",
-    component_cap: int = 1_000_000,
     distinct_pairs: bool = False,
 ) -> DataFrame:
     """docs × duplicate edges (a, b) → (id, is_kept) for ALL docs, under
@@ -68,13 +67,10 @@ def greedy_resolve(
     definition, unioned in at the end) — the working set is only the
     duplicate mass, a small fraction of the corpus at any scale.
 
-    ``engine``: "auto" = per-component pandas with frontier fallback for
-    components over ``component_cap`` EDGES (the edge list is what the
-    per-component task materializes, so the cap is measured in edges —
-    a dense small-node component is routed to the frontier engine too);
-    "frontier" = parallel rounds only (bounded by ``max_rounds``);
-    "pandas" = per-component only (raises if any component exceeds the
-    cap).
+    Components over the edge cap go through the frontier engine, bounded
+    by ``max_rounds`` (the cap is measured in EDGES, because the edge list
+    is what the per-component task materializes — a dense small-node
+    component is routed to the frontier engine too).
 
     ``distinct_pairs=True`` skips the canonicalizing dedup shuffle when
     the caller guarantees the input edges are already distinct as
@@ -84,31 +80,17 @@ def greedy_resolve(
     not change any keep/drop decision (the drop rule is an existence
     test), only inflate the joins, so the flag is a physical choice.
     """
-    if engine not in ("auto", "frontier", "pandas"):
-        raise ValueError(f"unknown greedy engine {engine!r}")
     id_col = cfg.id_col
     e = edges.select(
         F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
     ).filter(F.col("a") != F.col("b"))
     if not distinct_pairs:
         e = e.distinct()
-    e = e.localCheckpoint(eager=False)
-
-    if engine == "frontier":
-        dropped = _frontier_dropped(e, max_rounds)
-    else:
-        dropped = _component_dropped(e, max_rounds, engine, component_cap)
-
-    spark = docs.sparkSession
-    dropped_ids = (
-        dropped
-        if dropped is not None
-        else spark.createDataFrame([], "id long")
-    )
+    dropped = _component_dropped(e.localCheckpoint(eager=False), max_rounds)
     return docs.select(F.col(id_col)).join(
-        dropped_ids.withColumnRenamed("id", id_col), id_col, "left_anti"
+        dropped.withColumnRenamed("id", id_col), id_col, "left_anti"
     ).select(id_col, F.lit(True).alias("is_kept")).unionByName(
-        dropped_ids.select(
+        dropped.select(
             F.col("id").alias(id_col), F.lit(False).alias("is_kept")
         )
     )
@@ -135,13 +117,10 @@ def greedy_decide_py(
     return decision
 
 
-def _component_dropped(
-    e: DataFrame, max_rounds: int, engine: str, component_cap: int
-) -> DataFrame | None:
+def _component_dropped(e: DataFrame, max_rounds: int) -> DataFrame:
     """Dropped ids via per-component sequential resolution; components over
-    ``component_cap`` EDGES go through the frontier engine instead ("auto")
-    or raise ("pandas")."""
-    from .clustering import connected_components
+    ``_LOCAL_EDGE_CAP`` EDGES go through the frontier engine instead."""
+    from .clustering import _LOCAL_EDGE_CAP, connected_components
 
     comp = connected_components(e, distinct_pairs=True)
     # registry-persisted (r6): tagged is consumed by the big-component
@@ -168,15 +147,15 @@ def _component_dropped(
     # edges ≥ nodes−1 in any connected component, so the edge cap also
     # bounds the node count.
     sizes = tagged.groupBy("comp").agg(F.count("*").alias("n"))
-    big = sizes.filter(F.col("n") > component_cap).select("comp")
+    big = sizes.filter(F.col("n") > _LOCAL_EDGE_CAP).select("comp")
     # the big list is empty in practice (a >cap-member duplicate FAMILY
     # means the corpus is degenerate) and BOUNDED by construction (at most
-    # total_edges / component_cap ids), so collect it once: the common
+    # total_edges / _LOCAL_EDGE_CAP ids), so collect it once: the common
     # empty case then skips the routing anti-join entirely instead of
     # re-running the size aggregation in both the probe job and the final
     # job (r6 — the probe was a limit(1).count() whose work the decision
     # branches then repeated).
-    # Plan hazard if ``component_cap`` is ever lowered: ``isin(big_ids)``
+    # Plan hazard if the cap is ever lowered: ``isin(big_ids)``
     # inlines every id as a literal into the plan, so thousands of big
     # components would bloat analysis and codegen — switch to a broadcast
     # left_anti / left_semi join on ``big`` before shrinking the cap.
@@ -202,11 +181,6 @@ def _component_dropped(
     dropped = decided.filter(~F.col("is_kept")).select("id")
 
     if big_ids:
-        if engine == "pandas":
-            raise ValueError(
-                f"a duplicate component exceeds component_cap={component_cap}; "
-                "use engine='auto' (frontier fallback) for degenerate graphs"
-            )
         big_edges = tagged.filter(F.col("comp").isin(big_ids)).select("a", "b")
         big_dropped = _frontier_dropped(
             big_edges.localCheckpoint(eager=False), max_rounds
@@ -249,7 +223,7 @@ def _frontier_dropped(e: DataFrame, max_rounds: int) -> DataFrame | None:
             raise RuntimeError(
                 f"greedy frontier did not converge in {max_rounds} rounds "
                 f"({remaining} docs undecided — decision-chain depth exceeds "
-                "the round budget; raise max_rounds or use engine='auto')"
+                "the round budget; raise max_rounds)"
             )
         rounds += 1
         # frontier: undecided docs none of whose EARLIER neighbors are

@@ -21,8 +21,8 @@ this without silently losing the cluster:
   Jaccard-verified downstream, so the star cannot cause false merges; it
   can only miss pairs of docs that are each dissimilar to the star
   center but similar to each other *and* collide in no other band. The
-  count of star-routed docs is reported in the stage metrics (no silent
-  truncation).
+  count of over-cap buckets is recorded in the ``pairs`` checkpoint
+  manifest entry (no silent truncation).
 
 The hot path is WINDOWLESS by design: bucket statistics come from a
 hash aggregation (map-side combined, no sort), the head is selected by a
@@ -81,9 +81,7 @@ def portable_salt_sql(id_sql: str, n_salts_sql: str) -> str:
 
 def bucket_stats(rows: DataFrame, keys: list[str], id_col: str) -> DataFrame:
     """(keys..., bucket_size, bucket_min) hash aggregation — map-side
-    combined, no sort. Computed ONCE per run and shared by the pair
-    generators and the hot-bucket metrics (it is a full pass over the
-    hottest table)."""
+    combined, no sort (a full pass over the hottest table)."""
     return rows.groupBy(*keys).agg(
         F.count("*").alias("bucket_size"), F.min(id_col).alias("bucket_min")
     )
@@ -94,7 +92,6 @@ def capped_star_pairs(
     keys: list[str],
     id_col: str,
     cap: int,
-    stats: DataFrame | None = None,
 ) -> DataFrame:
     """Shared windowless capped+star pair topology over bucketed rows.
 
@@ -116,19 +113,11 @@ def capped_star_pairs(
     cap²/2 pairs per bucket. No window, no sort, no driver action. The
     star center (``bucket_min``) rides the broadcast join instead of a
     rank pass.
-
-    ``stats``: optionally pass a precomputed/persisted ``bucket_stats``
-    DataFrame so callers that also log hot-bucket metrics don't pay for
-    the aggregation twice (then nothing extra is persisted here).
     """
     from ..cache import track
 
-    if stats is None:
-        hot = track(bucket_stats(rows, keys, id_col).filter(F.col("bucket_size") > cap))
-    else:
-        hot = stats.filter(F.col("bucket_size") > cap)
+    hot = track(bucket_stats(rows, keys, id_col).filter(F.col("bucket_size") > cap))
     aug = rows.select(*keys, id_col).join(F.broadcast(hot), list(keys), "left")
-
 
     cold = aug.filter(F.col("bucket_size").isNull())
     cold_pairs = (
@@ -160,9 +149,7 @@ def capped_star_pairs(
     )
 
 
-def candidate_pairs(
-    bands: DataFrame, cfg: DedupeConfig, sizes: DataFrame | None = None
-) -> DataFrame:
+def candidate_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """(id, band_id, band_key) → distinct (a, b) with a < b.
 
     Physical shape: bucket stats come from a hash aggregation (map-side
@@ -171,22 +158,16 @@ def candidate_pairs(
     (``capped_star_pairs``). The cold path is a plain self-equi-join that
     AQE's skew-join splitting handles.
 
-    ``sizes``: optionally pass a precomputed/persisted ``bucket_stats``
-    DataFrame so callers that also log hot-bucket stats don't pay for the
-    aggregation twice.
-
     ``cfg.pair_topology == "chain_star"`` switches to the linear-cost
     topology (see ``_chain_star_pairs``).
     """
     if cfg.pair_topology == "chain_star":
-        return _chain_star_pairs(bands, cfg, sizes=sizes)
+        return _chain_star_pairs(bands, cfg)
     # the band key is already namespaced by band index (computed with
     # seed = band_id, functions/bands.py), so joining on the single long
     # key is equivalent to the composite join w.p. 1 - 2^-64 per bucket —
     # and shuffles ~30% fewer bytes through the hottest stage
-    return capped_star_pairs(
-        bands, ["band_key"], cfg.id_col, cfg.hot_band_cap, stats=sizes
-    )
+    return capped_star_pairs(bands, ["band_key"], cfg.id_col, cfg.hot_band_cap)
 
 
 def _chain_star_window(bands: DataFrame, id_col: str, part_cols: list[str]) -> DataFrame:
@@ -226,9 +207,7 @@ def _chain_star_window(bands: DataFrame, id_col: str, part_cols: list[str]) -> D
     )
 
 
-def _chain_star_pairs(
-    bands: DataFrame, cfg: DedupeConfig, sizes: DataFrame | None = None
-) -> DataFrame:
+def _chain_star_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
     """Linear-cost candidate topology: within each bucket (docs sorted by
     id) emit (predecessor, doc) chain pairs plus (bucket_min, doc) star
     pairs — 2 candidates per band row instead of h²/2 per bucket.
@@ -262,8 +241,8 @@ def _chain_star_pairs(
     Hot buckets are found from a deterministic 2% VALUE-filtered sample of
     the bands table (``xxhash64(id, band_key) % 50 == 0`` — layout- and
     parallelism-independent, so the same input always salts the same
-    buckets) or from the caller's exact ``sizes`` aggregate when one was
-    already computed for metrics. The (tiny) hot-key relation is persisted
+    buckets), with or without a checkpoint store, so the pair set never
+    depends on one. The (tiny) hot-key relation is persisted
     through the session cache registry so the sampled aggregation runs
     once across the broadcast branches.
 
@@ -281,32 +260,27 @@ def _chain_star_pairs(
 
     id_col = cfg.id_col
     cap = cfg.hot_band_cap
-    if sizes is not None:
-        hot_keys = sizes.filter(F.col("bucket_size") > cap).select(
-            "band_key", "bucket_size"
+    # Statistical hot detection: an exact bucket_stats pass is a full
+    # hash aggregation over the hottest table in the pipeline, and it
+    # exists only to find buckets worth salting — a ROUTING decision,
+    # not a semantic one (salting any bucket is always correct;
+    # leaving a mildly-over-cap bucket unsalted costs one window task
+    # of that size, which is harmless). A 2% sample finds every bucket
+    # that actually matters: a 10⁴-row bucket shows ~200 sampled rows
+    # (P[miss] ≈ 0), a 10⁷-row one ~2·10⁵; only buckets within a few ×
+    # of the cap are detected noisily, and those are exactly the ones
+    # that don't need salting. ~50× less aggregation input than the
+    # exact pass. The sample is a VALUE filter, not `DataFrame.sample`
+    # — partition-layout changes cannot flip a routing decision.
+    sample_mod = 50  # 2%
+    hot_keys = track(
+        bands.filter(
+            F.pmod(F.xxhash64(F.col(id_col), F.col("band_key")), sample_mod) == 0
         )
-    else:
-        # Statistical hot detection: an exact bucket_stats pass is a full
-        # hash aggregation over the hottest table in the pipeline, and it
-        # exists only to find buckets worth salting — a ROUTING decision,
-        # not a semantic one (salting any bucket is always correct;
-        # leaving a mildly-over-cap bucket unsalted costs one window task
-        # of that size, which is harmless). A 2% sample finds every bucket
-        # that actually matters: a 10⁴-row bucket shows ~200 sampled rows
-        # (P[miss] ≈ 0), a 10⁷-row one ~2·10⁵; only buckets within a few ×
-        # of the cap are detected noisily, and those are exactly the ones
-        # that don't need salting. ~50× less aggregation input than the
-        # exact pass. The sample is a VALUE filter, not `DataFrame.sample`
-        # — partition-layout changes cannot flip a routing decision.
-        sample_mod = 50  # 2%
-        hot_keys = track(
-            bands.filter(
-                F.pmod(F.xxhash64(F.col(id_col), F.col("band_key")), sample_mod) == 0
-            )
-            .groupBy("band_key")
-            .agg((F.count("*") * sample_mod).alias("bucket_size"))
-            .filter(F.col("bucket_size") > cap)
-        )
+        .groupBy("band_key")
+        .agg((F.count("*") * sample_mod).alias("bucket_size"))
+        .filter(F.col("bucket_size") > cap)
+    )
 
     # adaptive bypass: nothing hot -> plain per-bucket window (see
     # docstring). The count materializes the cached hot_keys, so the hot
@@ -353,12 +327,10 @@ def _chain_star_pairs(
     return pairs.unionByName(links).dropDuplicates(["a", "b"])
 
 
-def hot_bucket_stats(
-    bands: DataFrame, cfg: DedupeConfig, sizes: DataFrame | None = None
-) -> DataFrame:
-    """Per-bucket sizes above the cap — logged to the metrics table so
-    star-routing is observable, never silent. Pass the shared ``sizes``
-    aggregate to avoid a second full pass over the bands table."""
-    if sizes is None:
-        sizes = bucket_stats(bands, ["band_key"], cfg.id_col)
-    return sizes.filter(F.col("bucket_size") > cfg.hot_band_cap)
+def hot_bucket_stats(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
+    """Per-bucket sizes above the cap (exact) — the over-cap count a
+    checkpointed run records, so hot-band routing is observable, never
+    silent."""
+    return bucket_stats(bands, ["band_key"], cfg.id_col).filter(
+        F.col("bucket_size") > cfg.hot_band_cap
+    )

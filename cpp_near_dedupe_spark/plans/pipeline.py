@@ -17,9 +17,12 @@ functions and the rules its oracle pins; callers choose only the family.
 Checkpoint store: parquet directories + a JSON manifest. In a production
 deployment each stage writes an Iceberg table and the manifest is the
 Iceberg snapshot lineage; this environment has no Iceberg runtime jars, so
-the store abstracts only what we need (write/read/exists). Per-stage,
-per-partition row counters are appended to ``_metrics`` (lineage
-requirement), including hot-band star-routing counts — no silent drops.
+the store abstracts only what we need (write/read/exists). The store only
+stores: a stage body builds the same plan with or without one. Per-file
+row counters come from the footers of the files a stage just wrote and
+land in ``_metrics/<stage>.parquet`` (lineage requirement); the ``pairs``
+manifest entry also records how many band buckets exceed the hot-band cap
+— no silent drops.
 """
 
 from __future__ import annotations
@@ -31,6 +34,8 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,7 +43,7 @@ from ..config import DedupeConfig
 from ..operators.sketch_op import sketch_documents
 from ..operators.blocking import explode_bands
 from ..cache import track
-from ..operators.pairs import bucket_stats, candidate_pairs, hot_bucket_stats
+from ..operators.pairs import candidate_pairs, hot_bucket_stats
 from ..operators.scoring import score_pairs
 from ..operators.clustering import connected_components
 from ..operators.resolve import resolve_clusters
@@ -48,8 +53,10 @@ STAGES = ("signatures", "sig_reps", "bands", "pairs", "edges", "clusters", "reso
 
 # bump when the stage DAG or a stage's semantics change, so stale
 # checkpoints from older layouts can never be resumed into a new run
-# (v4: all_pairs hot-bucket routing became windowless hash-head+star)
-PIPELINE_VERSION = 4
+# (v4: all_pairs hot-bucket routing became windowless hash-head+star;
+# v5: chain_star always finds hot buckets from the 2% sample, also when a
+# store is attached)
+PIPELINE_VERSION = 5
 
 
 @dataclass(frozen=True)
@@ -101,7 +108,17 @@ def hash_family(name: str) -> HashFamily:
 
 
 class CheckpointStore:
-    """Parquet-directory stage store with a JSON manifest."""
+    """Parquet-directory stage store with a JSON manifest.
+
+    ``write`` is one Spark write per stage. Its row counters are read from
+    the parquet footers of the part files that write committed, on the
+    driver with pyarrow (no Spark job), and stored as
+    ``_metrics/<stage>.parquet`` — (stage, partition_id, rows), one row per
+    part file, ``partition_id`` being the part file's task number. Each
+    rewrite replaces that file, so ``_metrics`` always describes the live
+    stage and its sum is the manifest ``rows``. In an Iceberg deployment
+    these are the snapshot summary's per-file counts.
+    """
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -133,35 +150,47 @@ class CheckpointStore:
     def read(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self.path(stage))
 
-    def write(self, stage: str, df: DataFrame, fingerprint: str) -> DataFrame:
+    def write(self, stage: str, df: DataFrame, fingerprint: str, **notes) -> DataFrame:
+        """Write ``df`` as ``stage``; ``notes`` join its manifest entry."""
         t0 = time.time()
         df.write.mode("overwrite").parquet(self.path(stage))
-        out = self.spark.read.parquet(self.path(stage))
-        rows = self.append_metrics(stage, out)  # one job: lineage + total
+        rows = self._record_file_rows(stage)
         m = self._manifest()
         m[stage] = {
             "fingerprint": fingerprint,
             "rows": rows,
+            **notes,
             "wall_sec": round(time.time() - t0, 2),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
         self._save_manifest(m)
-        return out
+        # the written schema is known, so the read-back runs no
+        # schema-inference job (a resumed ``read`` still infers it)
+        return self.spark.read.schema(df.schema).parquet(self.path(stage))
 
-    def append_metrics(self, stage: str, df: DataFrame) -> int:
-        """Per-partition row counters for the stage output (lineage).
-        Returns the total row count (so callers don't need a second job)."""
-        counters = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .withColumn("stage", F.lit(stage))
+    def _record_file_rows(self, stage: str) -> int:
+        """Row count of each committed part file, read from its footer and
+        written to ``_metrics/<stage>.parquet`` (replacing the last one);
+        returns their sum."""
+        d = self.path(stage)
+        parts = sorted(
+            n for n in os.listdir(d) if n.startswith("part-") and n.endswith(".parquet")
         )
-        pdf = counters.toPandas()  # tiny: one row per partition
-        if len(pdf):
-            self.spark.createDataFrame(pdf).write.mode("append").parquet(
-                os.path.join(self.root, "_metrics")
-            )
-        return int(pdf["rows"].sum()) if len(pdf) else 0
+        rows = [pq.read_metadata(os.path.join(d, n)).num_rows for n in parts]
+        table = pa.table(
+            {
+                "stage": pa.array([stage] * len(parts), pa.string()),
+                "partition_id": pa.array([int(n.split("-")[1]) for n in parts], pa.int32()),
+                "rows": pa.array(rows, pa.int64()),
+            }
+        )
+        mdir = os.path.join(self.root, "_metrics")
+        os.makedirs(mdir, exist_ok=True)
+        # dot-prefixed: Spark skips it if a crash leaves it behind
+        tmp = os.path.join(mdir, f".{stage}.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(mdir, f"{stage}.parquet"))
+        return sum(rows)
 
 
 def signature_reps(signatures: DataFrame, cfg: DedupeConfig) -> DataFrame:
@@ -243,18 +272,18 @@ def run_pipeline(
     # (Spark does not CSE duplicated UDF subtrees, so e.g. unpersisted
     # signatures would re-run the sketch kernel once per reference).
     # Caching single-consumer stages just doubles their memory traffic —
-    # measured slower. bands has one consumer under chain_star (the
-    # window) but three under all_pairs (cold/hot/overflow branches);
-    # clusters feeds resolve's clustered-join, reps aggregation AND the
-    # singleton anti-join (3 consumers). bands feeds the bucket_stats
-    # aggregation plus the cold/hot branches under BOTH topologies.
+    # measured slower. bands feeds the hot-bucket aggregate (chain_star's
+    # 2% sample, all_pairs' exact bucket_stats) plus the pair branches
+    # under both topologies; clusters feeds resolve's clustered-join, reps
+    # aggregation AND the singleton anti-join (3 consumers).
     # "resolved" is NOT here (r6): every caller consumes it exactly once
     # (audited: entry/queries/dedupe_output all reference it in a single
     # plan branch), so persisting it only added a cache write of the
     # widest per-doc relation.
     multi_consumer = {"signatures", "sig_reps", "bands", "clusters"}
 
-    def stage(name: str, make) -> DataFrame:
+    def stage(name: str, make, notes=dict) -> DataFrame:
+        # ``notes``: extra manifest fields, computed only when written
         if store is None:
             out = make()
             if name in multi_consumer:
@@ -264,7 +293,7 @@ def run_pipeline(
             return out
         if store.is_complete(name, fp):
             return store.read(name)
-        return store.write(name, make(), fp)
+        return store.write(name, make(), fp, **notes())
 
     id_col = cfg.id_col
     signatures = stage("signatures", lambda: fam.sketch(docs, cfg))
@@ -289,31 +318,12 @@ def run_pipeline(
     if stop_after == "bands":
         return PipelineResult(signatures, bands, None, None, None, None)
 
-    def make_pairs() -> DataFrame:
-        # Exact bucket sizes are a full hash aggregation over the hottest
-        # table; compute them only when something needs EXACT numbers: the
-        # hot-bucket metrics (checkpointed runs) or all_pairs' cap routing
-        # (part of its verified pair-set definition). chain_star's salting
-        # is a routing-only decision, so without a checkpoint it detects
-        # hot buckets from a 2% sample inside _chain_star_pairs instead —
-        # the shared aggregate is then skipped entirely.
-        sizes = None
-        if store is not None or cfg.pair_topology == "all_pairs":
-            sizes = track(bucket_stats(bands, ["band_key"], cfg.id_col))
-        if store is not None:
-            # observability: record over-cap buckets routed through the star.
-            # Separate directory from the per-partition counters — the two
-            # writers have different schemas and a mixed parquet dir would
-            # be read back nondeterministically (schema sampled per-footer).
-            stats = hot_bucket_stats(bands, cfg, sizes=sizes).withColumn(
-                "stage", F.lit("pairs_hot_buckets")
-            )
-            stats.write.mode("append").parquet(
-                os.path.join(store.root, "_metrics_hot_buckets")
-            )
-        return candidate_pairs(bands, cfg, sizes=sizes)
-
-    pairs = stage("pairs", make_pairs)
+    # the over-cap bucket count is lineage only: routing never reads it
+    pairs = stage(
+        "pairs",
+        lambda: candidate_pairs(bands, cfg),
+        notes=lambda: {"hot_buckets": hot_bucket_stats(bands, cfg).count()},
+    )
     if stop_after == "pairs":
         return PipelineResult(signatures, bands, pairs, None, None, None)
 

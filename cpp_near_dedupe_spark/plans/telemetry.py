@@ -6,9 +6,11 @@ Spark analogue of "queue depth" is per-stage task progress, which the
 driver can poll without instrumenting the job: a daemon thread samples
 ``sc.statusTracker()`` and prints elapsed wall time plus every active
 stage's completed/total tasks to stderr (stdout stays reserved for the
-run's JSON summary line). Post-hoc, per-stage row counters live in the
-checkpoint store's ``_metrics`` table; on a real cluster the Spark UI
-supersedes this, but spark-submit batch logs benefit from the heartbeat.
+run's JSON summary line). Post-hoc, a checkpointed run keeps per-file row
+counters in ``_metrics/<stage>.parquet`` (read from the written parquet
+footers) and the over-cap band-bucket count in the ``pairs`` manifest
+entry; on a real cluster the Spark UI supersedes this, but spark-submit
+batch logs benefit from the heartbeat.
 """
 
 from __future__ import annotations

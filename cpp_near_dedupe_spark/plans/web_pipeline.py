@@ -33,7 +33,7 @@ projection stage, kept out of the default chain so the seven-stage
 oracle pin stays byte-stable. The report counts rows
 surviving each stage plus rows the stage changed or removed — the
 numbers an operator watches on a 100 TB run (the `_metrics` counters
-carry the same story per partition).
+carry the same story per written file).
 
 Scale shape: stages 2-4 are pure projections fused into one codegen
 stage by Catalyst; stages 1, 5, 6, 7 are the operators' own audited

@@ -8,9 +8,11 @@ ComparerThread.h:271-414`). Batch Spark replays that per micro-batch:
 * state = (signatures, bands) parquet directories — the Spark analogue of
   the reference's hash arena + LSH maps (`HashTable.h:24-109`,
   `LSHBandHashMap.h:234-358`), except durable and append-only.
-* a new batch is first deduped *within itself* (the full pipeline), then
-  its survivors are scored against state candidates; docs matching state
-  are dropped; the rest are appended to state.
+* a new batch is first deduped *within itself* (the pipeline's pairs →
+  edges → clusters → resolve chain over the batch's own bands, without
+  ``run_pipeline``'s identical-sketch collapse), then its survivors are
+  scored against state candidates; docs matching state are dropped; the
+  rest are appended to state.
 
 Ordering semantics (default) match the reference's arrival-order greedy
 pass at batch granularity: earlier batches always win; within a batch the
@@ -265,7 +267,7 @@ def dedupe_increment(
             spark, new_docs, sigs_new, bands_new, state, cfg, fam.score
         )
 
-    # 1. dedupe the batch against itself (full pipeline semantics)
+    # 1. dedupe the batch against itself (pipeline stages, no collapse)
     pairs_in = candidate_pairs(bands_new, cfg)
     edges_in = fam.score(pairs_in, sigs_new, cfg).filter(
         F.col("jaccard") >= F.lit(cfg.threshold)

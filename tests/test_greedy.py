@@ -229,10 +229,20 @@ def test_incremental_strict_order_matches_per_doc_reference(spark, tmp_path):
     assert {r.doc_id for r in kept.collect()} == {1, 3}
 
 
-def test_engines_agree_and_deep_chain_is_one_job(spark):
+def _frontier_kept(spark, ids, edges, max_rounds):
+    """Keep/drop map from the frontier engine alone (the cross-check
+    reference); ``edges`` must already be (earlier, later)."""
+    from cpp_near_dedupe_spark.operators.greedy import _frontier_dropped
+
+    dropped = _frontier_dropped(_edges_df(spark, edges), max_rounds)
+    gone = set() if dropped is None else {r.id for r in dropped.collect()}
+    return {i: i not in gone for i in ids}
+
+
+def test_engines_agree_and_deep_chain_is_one_job(spark, monkeypatch):
     """r4: the per-component pandas engine must equal the frontier engine
     on a mixed graph, and a 500-link decision chain — 500 rounds under
-    the frontier — resolves under 'auto' without touching max_rounds."""
+    the frontier — resolves per component without touching max_rounds."""
     import time
 
     from cpp_near_dedupe_spark.operators import greedy as G
@@ -244,12 +254,14 @@ def test_engines_agree_and_deep_chain_is_one_job(spark):
     docs = _ids_df(spark, ids)
     edges = _edges_df(spark, chain + extra)
 
+    monkeypatch.setattr(G, "LAST_FRONTIER_ROUNDS", 0)
     t0 = time.time()
     auto = {
         r.doc_id: r.is_kept
-        for r in greedy_resolve(docs, edges, CFG, engine="auto").collect()
+        for r in greedy_resolve(docs, edges, CFG).collect()
     }
     auto_wall = time.time() - t0
+    assert G.LAST_FRONTIER_ROUNDS == 0  # every component under the cap
     # alternating keep on the chain (greedy MIS from the minimum)
     for i in range(n):
         assert auto[i] == (i % 2 == 0), f"doc {i}"
@@ -258,21 +270,12 @@ def test_engines_agree_and_deep_chain_is_one_job(spark):
     # the frontier engine on the same chain would need n-1 rounds — prove
     # the claim on a shorter chain and pin the round count
     short = [(i, i + 1) for i in range(39)]
-    frontier = {
-        r.doc_id: r.is_kept
-        for r in greedy_resolve(
-            _ids_df(spark, range(40)),
-            _edges_df(spark, short),
-            CFG,
-            engine="frontier",
-            max_rounds=60,
-        ).collect()
-    }
+    frontier = _frontier_kept(spark, range(40), short, max_rounds=60)
     # rounds == decision-chain depth in NODES: doc 0 decides in round 1,
     # each successor one round later -> 40 rounds for a 40-node chain
     assert G.LAST_FRONTIER_ROUNDS == 40
     assert all(frontier[i] == (i % 2 == 0) for i in range(40))
-    print(f"auto engine resolved 500-chain in {auto_wall:.1f}s "
+    print(f"per-component engine resolved 500-chain in {auto_wall:.1f}s "
           f"(frontier: 40 rounds for a 40-node chain)")
 
 
@@ -280,14 +283,8 @@ def test_frontier_converging_on_last_round_is_success(spark):
     """ADVICE r3: converging in exactly max_rounds must not raise (the old
     for/else raised 'did not converge' despite full convergence)."""
     chain = [(i, i + 1) for i in range(5)]  # decision depth exactly 6 nodes
-    out = greedy_resolve(
-        _ids_df(spark, range(6)),
-        _edges_df(spark, chain),
-        CFG,
-        engine="frontier",
-        max_rounds=6,
-    ).toPandas()
-    assert len(out) == 6  # no RuntimeError
+    out = _frontier_kept(spark, range(6), chain, max_rounds=6)  # no RuntimeError
+    assert out == {i: i % 2 == 0 for i in range(6)}
 
 
 def test_frontier_round_budget_exceeded_raises_cleanly(spark):
@@ -295,30 +292,29 @@ def test_frontier_round_budget_exceeded_raises_cleanly(spark):
 
     chain = [(i, i + 1) for i in range(10)]
     with _pytest.raises(RuntimeError, match="did not converge"):
-        greedy_resolve(
-            _ids_df(spark, range(11)),
-            _edges_df(spark, chain),
-            CFG,
-            engine="frontier",
-            max_rounds=3,
+        _frontier_kept(spark, range(11), chain, max_rounds=3)
+
+
+def _over_cap_greedy(spark, monkeypatch, ids, edges, cap):
+    """greedy_resolve with the per-component edge cap (clustering's
+    ``_LOCAL_EDGE_CAP``) lowered to ``cap``; asserts the over-cap
+    component went through the frontier engine."""
+    from cpp_near_dedupe_spark.operators import clustering
+    from cpp_near_dedupe_spark.operators import greedy as G
+
+    monkeypatch.setattr(clustering, "_LOCAL_EDGE_CAP", cap)
+    monkeypatch.setattr(G, "LAST_FRONTIER_ROUNDS", 0)
+    out = {
+        r.doc_id: r.is_kept
+        for r in greedy_resolve(
+            _ids_df(spark, ids), _edges_df(spark, edges), CFG
         ).collect()
+    }
+    assert G.LAST_FRONTIER_ROUNDS > 0
+    return out
 
 
-def test_pandas_engine_rejects_over_cap_component(spark):
-    import pytest as _pytest
-
-    edges = _edges_df(spark, [(i, i + 1) for i in range(9)])
-    with _pytest.raises(ValueError, match="component_cap"):
-        greedy_resolve(
-            _ids_df(spark, range(10)),
-            edges,
-            CFG,
-            engine="pandas",
-            component_cap=5,
-        ).collect()
-
-
-def test_auto_falls_back_to_frontier_for_big_components(spark):
+def test_auto_falls_back_to_frontier_for_big_components(spark, monkeypatch):
     """Over-cap components route through the frontier engine; results must
     still match the python oracle."""
     from cpp_near_dedupe_spark.operators.greedy import greedy_decide_py
@@ -326,51 +322,21 @@ def test_auto_falls_back_to_frontier_for_big_components(spark):
     star = [(0, j) for j in range(1, 30)]          # big (cap=10) star
     small = [(100, 101), (101, 102)]               # small chain
     ids = list(range(30)) + [100, 101, 102]
-    out = {
-        r.doc_id: r.is_kept
-        for r in greedy_resolve(
-            _ids_df(spark, ids),
-            _edges_df(spark, star + small),
-            CFG,
-            engine="auto",
-            component_cap=10,
-        ).collect()
-    }
-    expect = greedy_decide_py(star + small, ids)
-    assert out == expect
+    out = _over_cap_greedy(spark, monkeypatch, ids, star + small, cap=10)
+    assert out == greedy_decide_py(star + small, ids)
 
 
-def test_component_cap_counts_edges_not_nodes(spark):
+def test_component_cap_counts_edges_not_nodes(spark, monkeypatch):
     """r5 (VERDICT #3): the cap bounds the per-task EDGE list. A clique on
     8 nodes carries 28 edges — under a node-count reading of cap=20 it
-    would stay on the pandas path, but the task materializes 28 edge rows,
-    so it must route to the frontier engine. The pandas engine (which
-    raises on over-cap) proves the routing; auto must still match the
-    python oracle through the fallback."""
-    import pytest as _pytest
-
+    would stay on the per-component path, but the task materializes 28
+    edge rows, so it must route to the frontier engine, and still match
+    the python oracle through the fallback."""
     from cpp_near_dedupe_spark.operators.greedy import greedy_decide_py
 
     clique = [(i, j) for i in range(8) for j in range(i + 1, 8)]  # 28 edges
     ids = list(range(8))
-    with _pytest.raises(ValueError, match="component_cap"):
-        greedy_resolve(
-            _ids_df(spark, ids),
-            _edges_df(spark, clique),
-            CFG,
-            engine="pandas",
-            component_cap=20,
-        ).collect()
-    out = {
-        r.doc_id: r.is_kept
-        for r in greedy_resolve(
-            _ids_df(spark, ids),
-            _edges_df(spark, clique),
-            CFG,
-            engine="auto",
-            component_cap=20,
-        ).collect()
-    }
+    out = _over_cap_greedy(spark, monkeypatch, ids, clique, cap=20)
     assert out == greedy_decide_py(clique, ids)
 
 

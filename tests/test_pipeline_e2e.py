@@ -164,6 +164,7 @@ def test_resume_from_checkpoint(spark, pages_600, tmp_path):
     metrics = spark.read.parquet(os.path.join(ckpt, "_metrics"))
     stages = {r.stage for r in metrics.select("stage").distinct().collect()}
     assert {"signatures", "bands", "pairs", "edges", "clusters", "resolved"} <= stages
+    _assert_counters_describe_stages(spark, ckpt)
 
     # the hash family is part of the fingerprint: a sql run over the same
     # dir and input token never resumes the parity checkpoint
@@ -190,6 +191,64 @@ def test_resume_from_checkpoint(spark, pages_600, tmp_path):
     cfg2 = DedupeConfig(id_col="doc_id", text_col="text", order_col="warc_ts", threshold=0.8)
     run_pipeline(spark, docs, cfg2, checkpoint_dir=ckpt, input_token="t1", stop_after="signatures")
     assert os.path.getmtime(os.path.join(ckpt, "signatures", "_SUCCESS")) != sig_mtime
+
+    # rewritten stages (sql family, then the config change) replace their
+    # counters instead of piling new ones on top
+    _assert_counters_describe_stages(spark, ckpt)
+
+
+def _assert_counters_describe_stages(spark, ckpt):
+    """Each checkpointed stage's ``_metrics`` rows: one per part file,
+    summing to the manifest ``rows`` and to the stage's row count."""
+    import json, os
+
+    manifest = json.load(open(os.path.join(ckpt, "manifest.json")))
+    metrics = spark.read.parquet(os.path.join(ckpt, "_metrics")).toPandas()
+    for stage, entry in manifest.items():
+        counters = metrics[metrics.stage == stage]
+        parts = [
+            n for n in os.listdir(os.path.join(ckpt, stage))
+            if n.startswith("part-") and n.endswith(".parquet")
+        ]
+        assert len(counters) == len(parts), stage
+        n = spark.read.parquet(os.path.join(ckpt, stage)).count()
+        assert counters.rows.sum() == entry["rows"] == n, stage
+
+
+def test_checkpoint_leaves_chain_star_outputs_unchanged(spark, tmp_path):
+    """The store only stores: with band buckets just over ``hot_band_cap``
+    (a 12-member near-duplicate family under cap 8), a checkpointed
+    chain_star run has the same pairs, edges and resolved rows as an
+    uncheckpointed one, and records the over-cap buckets in its manifest."""
+    import json, os
+
+    rng = np.random.default_rng(7)
+    vocab = [f"w{i}" for i in range(5000)]
+    base = " ".join(rng.choice(vocab, 300))
+    family = [f"{base} tail{i} end{i}" for i in range(12)]
+    others = [" ".join(rng.choice(vocab, 300)) for _ in range(30)]
+    texts = family + others
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
+        "doc_id long, text string",
+    )
+    cfg = DedupeConfig(id_col="doc_id", text_col="text", hot_band_cap=8)
+    assert cfg.pair_topology == "chain_star"
+    ckpt = str(tmp_path / "ckpt")
+    stored = run_pipeline(spark, docs, cfg, checkpoint_dir=ckpt, input_token="t")
+    plain = run_pipeline(spark, docs, cfg)
+
+    def rows(df, keys):
+        return df.toPandas().sort_values(keys).reset_index(drop=True)
+
+    for name, keys in (("pairs", ["a", "b"]), ("edges", ["a", "b"]),
+                       ("resolved", ["doc_id"])):
+        pd.testing.assert_frame_equal(
+            rows(getattr(stored, name), keys), rows(getattr(plain, name), keys)
+        )
+    manifest = json.load(open(os.path.join(ckpt, "manifest.json")))
+    assert manifest["pairs"]["hot_buckets"] > 0
+    _assert_counters_describe_stages(spark, ckpt)
 
 
 def test_threshold_monotonicity(spark, pages_600):

@@ -275,23 +275,3 @@ def test_capped_star_head_is_proper_hash_subset(spark):
             (0, j) for j in range(1, n)
         }
         assert got == expected  # identical at BOTH parallelism levels
-
-
-def test_capped_star_precomputed_stats_path(spark):
-    """The caller-supplied stats path (pipeline checkpoint runs pass the
-    shared bucket_stats aggregate) must produce exactly the same pairs as
-    the self-computed path."""
-    from cpp_near_dedupe_spark.operators.pairs import bucket_stats, capped_star_pairs
-
-    rows = spark.range(600).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 3 == 0).cast("long").alias("band_key")
-    )
-    stats = bucket_stats(rows, ["band_key"], "doc_id")
-    a = {(r.a, r.b) for r in capped_star_pairs(rows, ["band_key"], "doc_id", 64).collect()}
-    b = {
-        (r.a, r.b)
-        for r in capped_star_pairs(
-            rows, ["band_key"], "doc_id", 64, stats=stats
-        ).collect()
-    }
-    assert a == b and len(a) > 0
