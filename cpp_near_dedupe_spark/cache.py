@@ -18,6 +18,14 @@ Plan-shaped small relations (e.g. the hot-bucket stats broadcast in
 operators/pairs.py) deliberately do NOT persist at all — identical
 broadcast subtrees are collapsed by Spark's ReuseExchange rule instead.
 
+Relations cut off their lineage by an eager ``localCheckpoint`` are not
+registry entries either — connected components' edge sets, and
+``dedupe_increment``'s survivor ids (streaming/incremental.py). The latter
+must not be a persist: its state append re-caches every cached plan that
+reads the state directories, which would drop the persist and re-run the
+state match for each later consumer. ``release_all`` leaves such blocks
+alone; they go when their DataFrame is garbage-collected.
+
 Scope: the registry is process-global and assumes SERIAL query execution
 on the driver — one query is built, materialized, and released before the
 next begins (the contract bench.py and the ``_released`` wrappers in

@@ -38,6 +38,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import DedupeConfig
 from ..operators.sketch_op import sketch_documents
@@ -118,6 +119,11 @@ class CheckpointStore:
     rewrite replaces that file, so ``_metrics`` always describes the live
     stage and its sum is the manifest ``rows``. In an Iceberg deployment
     these are the snapshot summary's per-file counts.
+
+    A manifest entry also holds the stage's schema, so a resumed ``read``
+    runs no schema-inference job; an entry without one is recomputed. A
+    rewrite drops the stage's entry before it touches the directory, so a
+    crash mid-write never leaves an old fingerprint naming new files.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -142,30 +148,33 @@ class CheckpointStore:
         return os.path.join(self.root, stage)
 
     def is_complete(self, stage: str, fingerprint: str) -> bool:
-        e = self._manifest().get(stage)
-        return bool(e) and e.get("fingerprint") == fingerprint and os.path.exists(
+        e = self._manifest().get(stage) or {}
+        return e.get("fingerprint") == fingerprint and "schema" in e and os.path.exists(
             os.path.join(self.path(stage), "_SUCCESS")
         )
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(stage))
+        schema = StructType.fromJson(self._manifest()[stage]["schema"])
+        return self.spark.read.schema(schema).parquet(self.path(stage))
 
     def write(self, stage: str, df: DataFrame, fingerprint: str, **notes) -> DataFrame:
         """Write ``df`` as ``stage``; ``notes`` join its manifest entry."""
         t0 = time.time()
+        m = self._manifest()
+        if m.pop(stage, None) is not None:
+            self._save_manifest(m)
         df.write.mode("overwrite").parquet(self.path(stage))
         rows = self._record_file_rows(stage)
-        m = self._manifest()
         m[stage] = {
             "fingerprint": fingerprint,
             "rows": rows,
             **notes,
             "wall_sec": round(time.time() - t0, 2),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "schema": df.schema.jsonValue(),
         }
         self._save_manifest(m)
-        # the written schema is known, so the read-back runs no
-        # schema-inference job (a resumed ``read`` still infers it)
+        # the written schema is known: the read-back runs no inference job
         return self.spark.read.schema(df.schema).parquet(self.path(stage))
 
     def _record_file_rows(self, stage: str) -> int:

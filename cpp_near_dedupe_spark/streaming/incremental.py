@@ -13,6 +13,9 @@ ComparerThread.h:271-414`). Batch Spark replays that per micro-batch:
   ``run_pipeline``'s identical-sketch collapse), then its survivors are
   scored against state candidates; docs matching state are dropped; the
   rest are appended to state.
+* the survivor ids are materialized before the append, off the state's
+  lineage: the appends and the returned frame read them, so nothing
+  collected after the append re-runs the state match.
 
 Ordering semantics (default) match the reference's arrival-order greedy
 pass at batch granularity: earlier batches always win; within a batch the
@@ -32,6 +35,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import DedupeConfig
 from ..operators.pairs import candidate_pairs
@@ -66,22 +70,25 @@ class SignatureState:
         self._recover(self.bands_path)
         return os.path.exists(os.path.join(self.sig_path, "_SUCCESS"))
 
-    def signatures(self) -> DataFrame:
-        self._recover(self.sig_path)
-        return self.spark.read.parquet(self.sig_path)
+    def signatures(self, schema: StructType | None = None) -> DataFrame:
+        return self._read(self.sig_path, schema)
 
-    def bands(self) -> DataFrame:
-        self._recover(self.bands_path)
-        return self.spark.read.parquet(self.bands_path)
+    def bands(self, schema: StructType | None = None) -> DataFrame:
+        return self._read(self.bands_path, schema)
+
+    def _read(self, path: str, schema: StructType | None) -> DataFrame:
+        # the appended frames' schema, if known, saves the inference job
+        self._recover(path)
+        reader = self.spark.read
+        return (reader.schema(schema) if schema else reader).parquet(path)
 
     def append(self, signatures: DataFrame, bands: DataFrame) -> None:
         # the two appends are independent jobs on different directories;
         # submitting them from two driver threads lets the second job's
         # tasks back-fill executors freed by the first one's tail (the
         # standard overlap-independent-jobs pattern) instead of paying two
-        # full job latencies back to back (r6). Callers persist the shared
-        # survivor-id input, so concurrent materialization is computed
-        # once (Spark block manager serializes the cache fill).
+        # full job latencies back to back (r6). Callers pass frames over
+        # materialized survivor ids, so neither append recomputes them.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as ex:
@@ -263,46 +270,44 @@ def dedupe_increment(
     bands_new = track(fam.bands(sigs_new, cfg))
 
     if strict_order:
-        return _dedupe_increment_strict(
-            spark, new_docs, sigs_new, bands_new, state, cfg, fam.score
+        survivor_ids = _dedupe_increment_strict(
+            new_docs, sigs_new, bands_new, state, cfg, fam.score
         )
-
-    # 1. dedupe the batch against itself (pipeline stages, no collapse)
-    pairs_in = candidate_pairs(bands_new, cfg)
-    edges_in = fam.score(pairs_in, sigs_new, cfg).filter(
-        F.col("jaccard") >= F.lit(cfg.threshold)
-    )
-    clusters = connected_components(
-        edges_in.select("a", "b"), cfg.cc_max_iterations, distinct_pairs=True
-    )
-    resolved = resolve_clusters(new_docs, clusters, cfg)
-    # survivor-ID persists (r6): the within-batch kept set feeds the state
-    # scoring joins, BOTH state appends, and the returned kept relation —
-    # unpersisted, each consumer re-ran the whole resolve subtree (docs ⋈
-    # clusters → min-agg → join-back), measured ~3 extra resolve passes per
-    # epoch. The persisted relation is one slim id column per batch, the
-    # same registry/lifecycle as the sketch persists above.
-    kept_ids = track(
-        resolved.filter(F.col("is_kept")).select(id_col)
-    )
-
-    # 2. score batch survivors against the retained state (reference
-    # semantics: incoming doc vs retained uniques sharing >=1 band)
-    if state.exists():
-        dup_ids = _state_matches(
-            state,
-            sigs_new.join(kept_ids, id_col, "left_semi"),
-            bands_new.join(kept_ids, id_col, "left_semi"),
-            cfg,
-            fam.score,
-        )
-        # final survivors = within-batch keepers minus state matches; one
-        # slim persisted id relation shared by the appends and the return
-        survivor_ids = track(kept_ids.join(dup_ids, id_col, "left_anti"))
     else:
-        survivor_ids = kept_ids
+        # 1. dedupe the batch against itself (pipeline stages, no collapse)
+        pairs_in = candidate_pairs(bands_new, cfg)
+        edges_in = fam.score(pairs_in, sigs_new, cfg).filter(
+            F.col("jaccard") >= F.lit(cfg.threshold)
+        )
+        clusters = connected_components(
+            edges_in.select("a", "b"), cfg.cc_max_iterations, distinct_pairs=True
+        )
+        resolved = resolve_clusters(new_docs, clusters, cfg)
+        # kept-ID persist (r6): the within-batch kept set feeds both state
+        # scoring joins and the anti-join below — unpersisted, each
+        # consumer re-ran the whole resolve subtree (docs ⋈ clusters →
+        # min-agg → join-back). One slim id column per batch, the same
+        # registry/lifecycle as the sketch persists above.
+        survivor_ids = track(resolved.filter(F.col("is_kept")).select(id_col))
 
-    # 3. append survivors to state
+        # 2. score batch survivors against the retained state (reference
+        # semantics: incoming doc vs retained uniques sharing >=1 band)
+        if state.exists():
+            dup_ids = _state_matches(
+                state,
+                sigs_new.join(survivor_ids, id_col, "left_semi"),
+                bands_new.join(survivor_ids, id_col, "left_semi"),
+                cfg,
+                fam.score,
+            )
+            survivor_ids = survivor_ids.join(dup_ids, id_col, "left_anti")
+
+    # 3. append survivors to state. The ids are materialized first, off the
+    # state's lineage (eager localCheckpoint, as in operators/clustering.py):
+    # an append re-caches every cached plan that reads the state dirs, so the
+    # appends and the caller's collect would each re-run the state match on
+    # a registry persist. Not a registry entry: freed once garbage-collected.
+    survivor_ids = survivor_ids.localCheckpoint()
     state.append(
         sigs_new.join(survivor_ids, id_col, "left_semi"),
         bands_new.join(survivor_ids, id_col, "left_semi"),
@@ -319,25 +324,27 @@ def _state_matches(
 ) -> DataFrame:
     """Ids of the (sigs, bands) docs that share a band with a retained
     state doc and score jaccard >= threshold against it (reference
-    semantics: incoming doc vs retained uniques sharing >=1 band)."""
+    semantics: incoming doc vs retained uniques sharing >=1 band). The
+    state is read with the schemas of ``sigs`` and ``bands``: its files
+    were appended from frames of the same schemas."""
     id_col = cfg.id_col
     cand = (
         bands.select("band_id", "band_key", F.col(id_col).alias("a"))
         .join(
-            state.bands().select("band_id", "band_key", F.col(id_col).alias("b")),
+            state.bands(bands.schema).select(
+                "band_id", "band_key", F.col(id_col).alias("b")
+            ),
             ["band_id", "band_key"],
         )
-        # a != b: the state dir is re-listed on every (re)computation of
-        # the caller's returned DataFrame, so after append() it contains
-        # this batch's own survivors — without the guard a lazy consumer
-        # collecting post-append would match each survivor against itself
-        # (J=1.0) and drop it. Survivor-vs-survivor pairs are harmless:
-        # they already passed within-batch dedupe (J < thresh).
+        # a != b: the match runs once, before this batch's append (the
+        # caller materializes its result), so the state never holds the
+        # batch's own survivors here. The guard only keeps a doc whose id
+        # is already retained (a replayed epoch) from matching itself.
         .filter(F.col("a") != F.col("b"))
         .select("a", "b")
         .distinct()
     )
-    all_sigs = sigs.unionByName(state.signatures().select(sigs.columns))
+    all_sigs = sigs.unionByName(state.signatures(sigs.schema))
     matches = score_fn(cand, all_sigs, cfg).filter(
         F.col("jaccard") >= F.lit(cfg.threshold)
     )
@@ -345,7 +352,6 @@ def _state_matches(
 
 
 def _dedupe_increment_strict(
-    spark: SparkSession,
     new_docs: DataFrame,
     sigs_new: DataFrame,
     bands_new: DataFrame,
@@ -353,9 +359,9 @@ def _dedupe_increment_strict(
     cfg: DedupeConfig,
     score_fn,
 ) -> DataFrame:
-    """strict_order=True body: state-match first, then arrival-order greedy
-    over the remaining docs (see dedupe_increment docstring for the proof
-    sketch that this equals the reference's per-doc pass)."""
+    """strict_order=True survivor ids: state-match first, then arrival-order
+    greedy over the remaining docs (see dedupe_increment docstring for the
+    proof sketch that this equals the reference's per-doc pass)."""
     from ..cache import track
     from ..operators.greedy import greedy_resolve
 
@@ -367,7 +373,7 @@ def _dedupe_increment_strict(
         # live-docs anti-join whose result is consumed twice below (band
         # restriction + the greedy doc list) — unpersisted, the whole
         # state-scoring join re-ran per consumer (r6, same rationale as
-        # the default path's survivor-id persist)
+        # the default path's kept-id persist)
         state_dropped = track(
             _state_matches(state, sigs_new, bands_new, cfg, score_fn)
         )
@@ -387,14 +393,7 @@ def _dedupe_increment_strict(
         cfg,
         distinct_pairs=True,
     )
-    # survivor-ID persist (r6): shared by both state appends and the
-    # returned kept relation — see dedupe_increment
-    survivor_ids = track(out.filter(F.col("is_kept")).select(id_col))
-    state.append(
-        sigs_new.join(survivor_ids, id_col, "left_semi"),
-        bands_new.join(survivor_ids, id_col, "left_semi"),
-    )
-    return new_docs.join(survivor_ids, id_col, "left_semi")
+    return out.filter(F.col("is_kept")).select(id_col)
 
 
 def stream_dedupe(

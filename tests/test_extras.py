@@ -180,6 +180,72 @@ def test_incremental_sql_family_same_semantics(spark, tmp_path):
     assert isinstance(row.signature[0], str)
 
 
+@pytest.mark.parametrize("family", ["parity", "sql"])
+@pytest.mark.parametrize("strict", [False, True], ids=["default", "strict"])
+def test_incremental_result_outlives_state_dir(spark, tmp_path, strict, family):
+    """The returned frame reads survivor ids materialized before the state
+    append, not the state itself: with the state root moved away after the
+    call, collecting it still gives the batch's survivors."""
+    import os
+
+    from cpp_near_dedupe_spark.cache import release_all, tracked_count
+    from cpp_near_dedupe_spark.streaming.incremental import (
+        SignatureState,
+        dedupe_increment,
+    )
+
+    base = " ".join(f"w{i % 101}" for i in range(400))
+    other = " ".join(f"q{i % 91}" for i in range(400))
+    new = " ".join(f"z{i % 83}" for i in range(400))
+    state = SignatureState(spark, str(tmp_path / "state"))
+    run = lambda docs: dedupe_increment(  # noqa: E731
+        spark, _mk_docs(spark, docs), state, CFG, strict_order=strict, family=family
+    )
+    try:
+        run([(1, base), (2, base), (3, other)])
+        kept2 = run([(10, base), (11, new), (12, new)])
+        os.rename(state.root, str(tmp_path / "moved"))
+        assert {r.doc_id for r in kept2.collect()} == {11}
+    finally:
+        release_all()
+    assert tracked_count() == 0
+
+
+@pytest.mark.parametrize("strict", [False, True], ids=["default", "strict"])
+def test_incremental_returns_the_appended_ids(spark, tmp_path, strict):
+    """In every batch the returned ids are exactly the ids that batch
+    appended to the state's signatures."""
+    from cpp_near_dedupe_spark.cache import release_all, tracked_count
+    from cpp_near_dedupe_spark.streaming.incremental import (
+        SignatureState,
+        dedupe_increment,
+    )
+
+    texts = [" ".join(f"{p}{i % m}" for i in range(400)) for p, m in
+             (("w", 101), ("q", 91), ("z", 83), ("y", 79), ("x", 73))]
+    batches = [
+        [(1, texts[0]), (2, texts[0]), (3, texts[1])],
+        [(10, texts[0]), (11, texts[2]), (12, texts[3]), (13, texts[3])],
+        [(20, texts[1]), (21, texts[2]), (22, texts[4])],
+    ]
+    state = SignatureState(spark, str(tmp_path / "state"))
+    retained: set[int] = set()
+    try:
+        for docs in batches:
+            kept = dedupe_increment(
+                spark, _mk_docs(spark, docs), state, CFG, strict_order=strict
+            )
+            ids = {r.doc_id for r in kept.collect()}
+            state_ids = {r.doc_id for r in state.signatures().select("doc_id").collect()}
+            assert ids == state_ids - retained
+            retained = state_ids
+            release_all()
+            assert tracked_count() == 0
+    finally:
+        release_all()
+    assert retained == {1, 3, 11, 12, 22}
+
+
 def test_stream_dedupe_available_now(spark, tmp_path):
     from cpp_near_dedupe_spark.streaming.incremental import stream_dedupe
 

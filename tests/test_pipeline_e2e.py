@@ -3,6 +3,8 @@ pairwise F1 at matched band keys (the BASELINE.json metric), exact-dupe
 perfection, permutation invariance, idempotence, and resume-from-checkpoint.
 """
 
+import dataclasses
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -139,11 +141,14 @@ def test_resume_from_checkpoint(spark, pages_600, tmp_path):
     )
     ckpt = str(tmp_path / "ckpt")
     # run a prefix, "crash", then resume to completion
-    run_pipeline(spark, docs, CFG, checkpoint_dir=ckpt, input_token="t1", stop_after="pairs")
+    prefix = run_pipeline(
+        spark, docs, CFG, checkpoint_dir=ckpt, input_token="t1", stop_after="pairs"
+    )
     import json, os
 
     manifest = json.load(open(os.path.join(ckpt, "manifest.json")))
     assert set(manifest) == {"signatures", "sig_reps", "bands", "pairs"}
+    assert all("schema" in e for e in manifest.values())
     sig_mtime = os.path.getmtime(os.path.join(ckpt, "signatures", "_SUCCESS"))
 
     res = run_pipeline(spark, docs, CFG, checkpoint_dir=ckpt, input_token="t1")
@@ -153,6 +158,13 @@ def test_resume_from_checkpoint(spark, pages_600, tmp_path):
     }
     # completed stages were NOT recomputed
     assert os.path.getmtime(os.path.join(ckpt, "signatures", "_SUCCESS")) == sig_mtime
+    # resumed stages read back with the schemas they were written with;
+    # a fully resumed run does so for every stage
+    for name in ("signatures", "bands", "pairs"):
+        assert getattr(res, name).schema == getattr(prefix, name).schema, name
+    again = run_pipeline(spark, docs, CFG, checkpoint_dir=ckpt, input_token="t1")
+    for name in ("signatures", "bands", "pairs", "edges", "clusters", "resolved"):
+        assert getattr(again, name).schema == getattr(res, name).schema, name
 
     # resumed result identical to a fresh run
     fresh = run_pipeline(spark, docs, CFG)
@@ -195,6 +207,42 @@ def test_resume_from_checkpoint(spark, pages_600, tmp_path):
     # rewritten stages (sql family, then the config change) replace their
     # counters instead of piling new ones on top
     _assert_counters_describe_stages(spark, ckpt)
+
+
+def test_interrupted_rewrite_is_not_resumed(spark, tmp_path, monkeypatch):
+    """A stage rewrite under a changed config that dies after its parquet
+    commit, before its manifest entry is saved, leaves no entry behind: a
+    rerun under the old config recomputes the stage instead of resuming
+    the other config's files."""
+    from cpp_near_dedupe_spark.plans.pipeline import CheckpointStore
+
+    # > num_hashes distinct shingles per doc: every sketch is full length
+    texts = [" ".join(f"w{i}x{j}" for j in range(400)) for i in range(6)]
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
+        "doc_id long, text string",
+    )
+    cfg = DedupeConfig(id_col="doc_id", text_col="text")
+    ckpt = str(tmp_path / "ckpt")
+
+    def sig_lengths(res):
+        return {len(r.signature) for r in res.signatures.select("signature").collect()}
+
+    first = run_pipeline(spark, docs, cfg, checkpoint_dir=ckpt, stop_after="signatures")
+    assert sig_lengths(first) == {cfg.num_hashes}
+
+    def crash(self, stage):
+        raise RuntimeError("died after the parquet commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(CheckpointStore, "_record_file_rows", crash)
+        with pytest.raises(RuntimeError, match="died after"):
+            run_pipeline(
+                spark, docs, dataclasses.replace(cfg, num_hashes=128),
+                checkpoint_dir=ckpt, stop_after="signatures",
+            )
+    rerun = run_pipeline(spark, docs, cfg, checkpoint_dir=ckpt, stop_after="signatures")
+    assert sig_lengths(rerun) == {cfg.num_hashes}
 
 
 def _assert_counters_describe_stages(spark, ckpt):
