@@ -18,13 +18,18 @@ Plan-shaped small relations (e.g. the hot-bucket stats broadcast in
 operators/pairs.py) deliberately do NOT persist at all — identical
 broadcast subtrees are collapsed by Spark's ReuseExchange rule instead.
 
-Relations cut off their lineage by an eager ``localCheckpoint`` are not
-registry entries either — connected components' edge sets, and
-``dedupe_increment``'s survivor ids (streaming/incremental.py). The latter
-must not be a persist: its state append re-caches every cached plan that
-reads the state directories, which would drop the persist and re-run the
-state match for each later consumer. ``release_all`` leaves such blocks
-alone; they go when their DataFrame is garbage-collected.
+``dedupe_increment`` (streaming/incremental.py) tracks the batch's
+sketches and bands and its within-batch clusters, which
+``resolve_clusters`` reads three times. It keeps no persist of the
+within-batch kept ids: they are anti-joined once against the batch's
+state-match ids. Relations cut off their lineage by an eager
+``localCheckpoint`` are not registry entries either — connected
+components' edge sets, and ``dedupe_increment``'s state-match and
+survivor ids. The survivor ids must not be a persist: the state append
+re-caches every cached plan that reads the state directories, which
+would drop the persist and re-run the state match for each later
+consumer. ``release_all`` leaves such blocks alone; they go when their
+DataFrame is garbage-collected.
 
 Scope: the registry is process-global and assumes SERIAL query execution
 on the driver — one query is built, materialized, and released before the
@@ -37,6 +42,9 @@ multi-consumer kernel, and for side-effecting plans the caller must
 materialize before any release (``write_arrow_ipc`` localCheckpoints its
 summary for exactly this reason). Registry mutations themselves are
 lock-protected so an interleaved track/release never corrupts the list.
+One query may read its tracked caches from several driver threads
+(``dedupe_increment`` runs its state match beside its within-batch pass);
+the caller releases them only after every thread is done.
 """
 
 from __future__ import annotations

@@ -8,11 +8,12 @@ ComparerThread.h:271-414`). Batch Spark replays that per micro-batch:
 * state = (signatures, bands) parquet directories — the Spark analogue of
   the reference's hash arena + LSH maps (`HashTable.h:24-109`,
   `LSHBandHashMap.h:234-358`), except durable and append-only.
-* a new batch is first deduped *within itself* (the pipeline's pairs →
+* a new batch is deduped *within itself* (the pipeline's pairs →
   edges → clusters → resolve chain over the batch's own bands, without
-  ``run_pipeline``'s identical-sketch collapse), then its survivors are
-  scored against state candidates; docs matching state are dropped; the
-  rest are appended to state.
+  ``run_pipeline``'s identical-sketch collapse) while a second driver
+  thread scores the whole batch against state candidates (a doc's match
+  depends only on its own signature, bands and the state); survivors
+  matching state are dropped; the rest are appended to state.
 * the survivor ids are materialized before the append, off the state's
   lineage: the appends and the returned frame read them, so nothing
   collected after the append re-runs the state match.
@@ -32,7 +33,9 @@ output; the state directories make restarts idempotent per epoch.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -85,16 +88,17 @@ class SignatureState:
     def append(self, signatures: DataFrame, bands: DataFrame) -> None:
         # the two appends are independent jobs on different directories;
         # submitting them from two driver threads lets the second job's
-        # tasks back-fill executors freed by the first one's tail (the
-        # standard overlap-independent-jobs pattern) instead of paying two
-        # full job latencies back to back (r6). Callers pass frames over
-        # materialized survivor ids, so neither append recomputes them.
-        from concurrent.futures import ThreadPoolExecutor
-
+        # tasks back-fill executors freed by the first one's tail instead
+        # of paying two full job latencies back to back. The writes are
+        # wrapped here, on the calling thread, so their jobs run in its
+        # job group. Callers pass frames over materialized survivor ids,
+        # so neither write recomputes them.
         with ThreadPoolExecutor(max_workers=2) as ex:
             fs = [
                 ex.submit(
-                    lambda df=df, path=path: df.write.mode("append").parquet(path)
+                    inheritable_thread_target(self.spark)(
+                        lambda df=df, path=path: df.write.mode("append").parquet(path)
+                    )
                 )
                 for df, path in (
                     (signatures, self.sig_path),
@@ -269,40 +273,37 @@ def dedupe_increment(
     sigs_new = track(fam.sketch(new_docs, cfg))
     bands_new = track(fam.bands(sigs_new, cfg))
 
-    if strict_order:
-        survivor_ids = _dedupe_increment_strict(
-            new_docs, sigs_new, bands_new, state, cfg, fam.score
+    # the state match of the whole batch runs on a second driver thread,
+    # in the caller's job group, and materializes its ids there, beside the
+    # within-batch pass. Leaving the `with` waits for it, also when the
+    # within-batch pass raises: no job of the batch outlives the call.
+    with ThreadPoolExecutor(max_workers=1) as ex:
+        match = inheritable_thread_target(spark)(
+            lambda: _state_matches(
+                state, sigs_new, bands_new, cfg, fam.score
+            ).localCheckpoint()
         )
-    else:
-        # 1. dedupe the batch against itself (pipeline stages, no collapse)
-        pairs_in = candidate_pairs(bands_new, cfg)
-        edges_in = fam.score(pairs_in, sigs_new, cfg).filter(
-            F.col("jaccard") >= F.lit(cfg.threshold)
-        )
-        clusters = connected_components(
-            edges_in.select("a", "b"), cfg.cc_max_iterations, distinct_pairs=True
-        )
-        resolved = resolve_clusters(new_docs, clusters, cfg)
-        # kept-ID persist (r6): the within-batch kept set feeds both state
-        # scoring joins and the anti-join below — unpersisted, each
-        # consumer re-ran the whole resolve subtree (docs ⋈ clusters →
-        # min-agg → join-back). One slim id column per batch, the same
-        # registry/lifecycle as the sketch persists above.
-        survivor_ids = track(resolved.filter(F.col("is_kept")).select(id_col))
-
-        # 2. score batch survivors against the retained state (reference
-        # semantics: incoming doc vs retained uniques sharing >=1 band)
-        if state.exists():
-            dup_ids = _state_matches(
-                state,
-                sigs_new.join(survivor_ids, id_col, "left_semi"),
-                bands_new.join(survivor_ids, id_col, "left_semi"),
-                cfg,
-                fam.score,
+        dups = ex.submit(match) if state.exists() else None
+        if strict_order:
+            survivor_ids = _dedupe_increment_strict(
+                new_docs, sigs_new, bands_new, dups and dups.result(), cfg, fam.score
             )
-            survivor_ids = survivor_ids.join(dup_ids, id_col, "left_anti")
+        else:
+            # dedupe the batch against itself (pipeline stages, no
+            # collapse); resolve_clusters reads the clusters three times
+            pairs_in = candidate_pairs(bands_new, cfg)
+            edges_in = fam.score(pairs_in, sigs_new, cfg).filter(
+                F.col("jaccard") >= F.lit(cfg.threshold)
+            )
+            clusters = track(connected_components(
+                edges_in.select("a", "b"), cfg.cc_max_iterations, distinct_pairs=True
+            ))
+            resolved = resolve_clusters(new_docs, clusters, cfg)
+            survivor_ids = resolved.filter(F.col("is_kept")).select(id_col)
+            if dups:
+                survivor_ids = survivor_ids.join(dups.result(), id_col, "left_anti")
 
-    # 3. append survivors to state. The ids are materialized first, off the
+    # append survivors to state. The ids are materialized first, off the
     # state's lineage (eager localCheckpoint, as in operators/clustering.py):
     # an append re-caches every cached plan that reads the state dirs, so the
     # appends and the caller's collect would each re-run the state match on
@@ -336,10 +337,10 @@ def _state_matches(
             ),
             ["band_id", "band_key"],
         )
-        # a != b: the match runs once, before this batch's append (the
-        # caller materializes its result), so the state never holds the
-        # batch's own survivors here. The guard only keeps a doc whose id
-        # is already retained (a replayed epoch) from matching itself.
+        # a != b: the match runs once over the whole batch, before this
+        # batch's append, so the state never holds the batch's own docs
+        # here. The guard only keeps a doc whose id is already retained
+        # (a replayed epoch) from matching itself.
         .filter(F.col("a") != F.col("b"))
         .select("a", "b")
         .distinct()
@@ -355,29 +356,21 @@ def _dedupe_increment_strict(
     new_docs: DataFrame,
     sigs_new: DataFrame,
     bands_new: DataFrame,
-    state: SignatureState,
+    state_dups: DataFrame | None,
     cfg: DedupeConfig,
     score_fn,
 ) -> DataFrame:
-    """strict_order=True survivor ids: state-match first, then arrival-order
+    """strict_order=True survivor ids: the docs matching state
+    (``state_dups``, None on an empty state) first, then arrival-order
     greedy over the remaining docs (see dedupe_increment docstring for the
     proof sketch that this equals the reference's per-doc pass)."""
-    from ..cache import track
     from ..operators.greedy import greedy_resolve
 
     id_col = cfg.id_col
 
     live_docs = new_docs
-    if state.exists():
-        # slim persisted id relation: the state-dropped set feeds the
-        # live-docs anti-join whose result is consumed twice below (band
-        # restriction + the greedy doc list) — unpersisted, the whole
-        # state-scoring join re-ran per consumer (r6, same rationale as
-        # the default path's kept-id persist)
-        state_dropped = track(
-            _state_matches(state, sigs_new, bands_new, cfg, score_fn)
-        )
-        live_docs = new_docs.join(state_dropped, id_col, "left_anti")
+    if state_dups is not None:
+        live_docs = new_docs.join(state_dups, id_col, "left_anti")
 
     live_ids = live_docs.select(id_col)
     bands_live = bands_new.join(live_ids, id_col, "left_semi")

@@ -246,6 +246,206 @@ def test_incremental_returns_the_appended_ids(spark, tmp_path, strict):
     assert retained == {1, 3, 11, 12, 22}
 
 
+def _chain_texts():
+    """Three texts S ~ Y ~ X with X !~ S at threshold 0.7 under both
+    families: Y is S with 9 words replaced, X is Y with 9 more, in disjoint
+    shingle windows. Every shingle an edit removes or adds has an md5 above
+    S's 60 smallest, so the md5 family's sorted-sketch prefix (its first
+    bands) stays shared along the chain."""
+    import hashlib
+
+    def md5(words):
+        return hashlib.md5(" ".join(words).encode()).hexdigest()
+
+    base = [f"t{i}x" for i in range(400)]
+    floor = sorted(md5(base[i : i + 5]) for i in range(396))[60]
+    edits = {}
+    for p in range(4, 396, 5):
+        for new in (f"e{p}r{r}" for r in range(100)):
+            w = base[:p] + [new] + base[p + 1 :]
+            if all(min(md5(ws[i : i + 5]) for i in range(p - 4, p + 1)) > floor
+                   for ws in (base, w)):
+                edits[p] = new
+                break
+
+    def edited(n):
+        first = dict(list(edits.items())[:n])
+        return " ".join(first.get(p, t) for p, t in enumerate(base))
+
+    return edited(0), edited(18), edited(9)
+
+
+@pytest.mark.parametrize("family", ["parity", "sql"])
+def test_incremental_batch_drop_that_matches_state(spark, tmp_path, family):
+    """A doc dropped within its batch (Y, losing to X) that also matches
+    state (S) changes nothing: the state match runs over the whole batch,
+    and X, which does not match state, survives."""
+    from cpp_near_dedupe_spark.cache import release_all
+    from cpp_near_dedupe_spark.plans.pipeline import hash_family
+    from cpp_near_dedupe_spark.streaming.incremental import (
+        SignatureState,
+        _state_matches,
+        dedupe_increment,
+    )
+
+    s, x, y = _chain_texts()
+    new = " ".join(f"z{i % 83}" for i in range(400))
+    state = SignatureState(spark, str(tmp_path / "state"))
+    run = lambda docs: {  # noqa: E731
+        r.doc_id
+        for r in dedupe_increment(
+            spark, _mk_docs(spark, docs), state, CFG, family=family
+        ).collect()
+    }
+    try:
+        assert run([(1, s)]) == {1}
+        batch = _mk_docs(spark, [(10, x), (11, y), (12, new)])
+        fam = hash_family(family)
+        cfg = fam.config(CFG)
+        sigs = fam.sketch(batch, cfg)
+        dup = _state_matches(state, sigs, fam.bands(sigs, cfg), cfg, fam.score)
+        assert {r.doc_id for r in dup.collect()} == {11}
+        assert run([(10, x), (11, y), (12, new)]) == {10, 12}
+    finally:
+        release_all()
+
+
+@pytest.mark.parametrize("family", ["parity", "sql"])
+def test_incremental_crawl_equals_kept_minus_kept_matches(spark, tmp_path, family):
+    """A 3-batch generated crawl in warc_ts order returns, batch by batch,
+    the within-batch survivors minus those of them that match state (the
+    state match over the survivors' own signatures and bands)."""
+    from cpp_near_dedupe_spark.cache import release_all
+    from cpp_near_dedupe_spark.plans.pipeline import hash_family
+    from cpp_near_dedupe_spark.sources.datagen import generate_pages
+    from cpp_near_dedupe_spark.streaming.incremental import (
+        SignatureState,
+        _state_matches,
+        dedupe_increment,
+    )
+
+    cfg = DedupeConfig(id_col="doc_id", text_col="text", order_col="warc_ts")
+    fam = hash_family(family)
+    pages = generate_pages(300, seed=5).sort_values("warc_ts", kind="stable")
+    pages = pages.assign(doc_id=np.arange(len(pages)))[["doc_id", "warc_ts", "text"]]
+    state = SignatureState(spark, str(tmp_path / "state"))
+    dropped_by_state = 0
+    try:
+        for i, part in enumerate(np.array_split(pages, 3)):
+            docs = spark.createDataFrame(part)
+            fresh = SignatureState(spark, str(tmp_path / f"fresh{i}"))
+            kept = dedupe_increment(spark, docs, fresh, cfg, family=family)
+            kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
+            expected = kept_ids
+            if state.exists():
+                c = fam.config(cfg)
+                sigs = fam.sketch(docs, c).join(kept, "doc_id", "left_semi")
+                dup = _state_matches(state, sigs, fam.bands(sigs, c), c, fam.score)
+                expected = kept_ids - {r.doc_id for r in dup.collect()}
+            got = dedupe_increment(spark, docs, state, cfg, family=family)
+            assert {r.doc_id for r in got.collect()} == expected
+            dropped_by_state += len(kept_ids - expected)
+            release_all()
+    finally:
+        release_all()
+    assert dropped_by_state > 0
+
+
+def _tree_bytes(root):
+    import pathlib
+
+    return {p: p.read_bytes() for p in pathlib.Path(root).rglob("*") if p.is_file()}
+
+
+@pytest.mark.parametrize(
+    "fails, strict",
+    [("state_match", False), ("state_match", True), ("batch_pass", False)],
+    ids=["state_match-default", "state_match-strict", "batch_pass-default"],
+)
+def test_incremental_failure_appends_nothing(spark, tmp_path, monkeypatch, fails, strict):
+    """A batch whose state match (on the helper thread) or within-batch
+    pass (on the caller's thread) raises re-raises the error, leaves the
+    state directories byte-for-byte unchanged, and has no job still
+    running when the call returns."""
+    import time
+
+    from cpp_near_dedupe_spark.cache import release_all, tracked_count
+    from cpp_near_dedupe_spark.streaming import incremental
+
+    base = " ".join(f"w{i % 101}" for i in range(400))
+    new = " ".join(f"z{i % 83}" for i in range(400))
+    state = incremental.SignatureState(spark, str(tmp_path / "state"))
+    incremental.dedupe_increment(spark, _mk_docs(spark, [(1, base)]), state, CFG)
+    before = _tree_bytes(state.root)
+    real = incremental._state_matches
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected")
+
+    def slow_match(*args, **kwargs):
+        # a state match whose job is still running when the batch pass fails
+        def nap(batches):
+            for b in batches:
+                time.sleep(3)
+                yield b
+
+        dups = real(*args, **kwargs)
+        return dups.coalesce(1).mapInPandas(nap, dups.schema)
+
+    if fails == "state_match":
+        monkeypatch.setattr(incremental, "_state_matches", boom)
+    else:
+        monkeypatch.setattr(incremental, "_state_matches", slow_match)
+        monkeypatch.setattr(incremental, "candidate_pairs", boom)
+    try:
+        with pytest.raises(RuntimeError, match="injected"):
+            incremental.dedupe_increment(
+                spark, _mk_docs(spark, [(10, base), (11, new)]), state, CFG,
+                strict_order=strict,
+            )
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+        assert _tree_bytes(state.root) == before
+    finally:
+        release_all()
+    assert tracked_count() == 0
+
+
+@pytest.mark.parametrize("strict", [False, True], ids=["default", "strict"])
+def test_incremental_jobs_run_in_callers_job_group(spark, tmp_path, strict):
+    """Every job of a batch against state, the helper threads' included,
+    runs in the caller's job group, so cancelJobGroup reaches them."""
+    from cpp_near_dedupe_spark.cache import release_all
+    from cpp_near_dedupe_spark.streaming.incremental import (
+        SignatureState,
+        dedupe_increment,
+    )
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    base = " ".join(f"w{i % 101}" for i in range(400))
+    new = " ".join(f"z{i % 83}" for i in range(400))
+    state = SignatureState(spark, str(tmp_path / "state"))
+    run = lambda docs: dedupe_increment(  # noqa: E731
+        spark, _mk_docs(spark, docs), state, CFG, strict_order=strict
+    ).collect()
+    try:
+        run([(1, base)])
+        bus.waitUntilEmpty()
+        ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+        sc.setJobGroup("g", "one batch against state")
+        try:
+            assert {r.doc_id for r in run([(10, base), (11, new)])} == {11}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("g")
+        assert set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped == set()
+    finally:
+        release_all()
+
+
 def test_stream_dedupe_available_now(spark, tmp_path):
     from cpp_near_dedupe_spark.streaming.incremental import stream_dedupe
 
