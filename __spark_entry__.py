@@ -1227,11 +1227,7 @@ def _q_lsh_sql_greedy_kept(spark, sf_dir):
 
     docs = _chain_docs(spark, sf_dir)
     res = run_pipeline(spark, docs, CFG, stop_after="edges", family="sql")
-    # distinct_pairs: the pipeline's pair generator ends in dropDuplicates
-    # and the scoring joins are 1:1, so the edge set is already distinct
-    out = greedy_resolve(
-        docs, res.edges.select("a", "b"), CFG, distinct_pairs=True
-    )
+    out = greedy_resolve(docs, res.edges.select("a", "b"), CFG)
     return out.filter(F.col("is_kept")).select("doc_id")
 
 
@@ -1354,12 +1350,7 @@ def _q_lsh_greedy_kept(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     res = run_pipeline(spark, docs, CFG, stop_after="edges")
-    # distinct_pairs: scored rep-rep pairs (post-dropDuplicates) and the
-    # identical-sketch member edges are disjoint unordered-pair sets, so
-    # the union is already distinct
-    out = greedy_resolve(
-        docs, res.edges.select("a", "b"), CFG, distinct_pairs=True
-    )
+    out = greedy_resolve(docs, res.edges.select("a", "b"), CFG)
     return out.filter(F.col("is_kept")).select("doc_id")
 
 

@@ -14,15 +14,15 @@ queries; tests assert the registry drains — see
 tests/test_cache_lifecycle.py). Releasing is always safe: an unpersisted
 DataFrame stays computable, it just loses the cache.
 
-Plan-shaped small relations (e.g. the hot-bucket stats broadcast in
-operators/pairs.py) deliberately do NOT persist at all — identical
-broadcast subtrees are collapsed by Spark's ReuseExchange rule instead.
+The tiny hot-bucket relations of operators/pairs.py are tracked too:
+per-branch column pruning keeps their broadcast subtrees apart, so
+Spark's ReuseExchange rule cannot collapse them.
 
 ``dedupe_increment`` (streaming/incremental.py) tracks the batch's
-sketches and bands and its within-batch clusters, which
-``resolve_clusters`` reads three times. It keeps no persist of the
-within-batch kept ids: they are anti-joined once against the batch's
-state-match ids. Relations cut off their lineage by an eager
+sketches and bands. It keeps no persist of the within-batch clusters
+(``resolve_clusters`` reads them through one shared exchange) nor of the
+kept ids: they are anti-joined once against the batch's state-match ids.
+Relations cut off their lineage by an eager
 ``localCheckpoint`` are not registry entries either — connected
 components' edge sets, and ``dedupe_increment``'s state-match and
 survivor ids. The survivor ids must not be a persist: the state append

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, asdict
 
 
 @dataclass(frozen=True)
@@ -34,8 +34,6 @@ class DedupeConfig:
     order_col: str | None = None    # keep-first tiebreak (e.g. warc_ts); None -> id_col
 
     # scale knobs
-    shuffle_partitions: int = 32
-    max_records_per_batch: int = 2048   # Arrow batch size for the sketch UDF
     # bucket size above which pair generation switches from exact all-pairs
     # to capped all-pairs + star (see operators/pairs.py). 256 bounds a hot
     # bucket at ~32k scored pairs; recall is protected by the 64-band
@@ -57,17 +55,15 @@ class DedupeConfig:
     #                  maximal pairwise recall, O(h²) pairs per bucket.
     pair_topology: str = "chain_star"
     cc_max_iterations: int = 20         # large-star/small-star safety bound
-    # "auto": repartition the (id, text) projection up to min(shuffle
-    # partitions, cores) when the scan yields fewer splits (small-input
-    # fixup only); "never": trust the scan's partitioning (the at-scale
-    # default knob is spark.sql.files.maxPartitionBytes)
-    sketch_repartition: str = "auto"
 
     @property
     def band_size(self) -> int:
         return self.num_hashes // self.bands
 
     def validate(self) -> None:
+        for name in ("shingle_k", "num_hashes", "bands", "hot_band_cap"):
+            if getattr(self, name) < 1:
+                raise ValueError(f"{name} must be >= 1, got {getattr(self, name)}")
         if self.num_hashes % self.bands:
             raise ValueError(
                 f"bands ({self.bands}) must evenly divide num_hashes "
@@ -79,22 +75,14 @@ class DedupeConfig:
             raise ValueError("hash_bits must be 32 or 64")
         if self.band_key_mode not in ("content", "rbs"):
             raise ValueError("band_key_mode must be 'content' or 'rbs'")
-        if self.sketch_repartition not in ("auto", "never"):
-            raise ValueError("sketch_repartition must be 'auto' or 'never'")
         if self.pair_topology not in ("all_pairs", "chain_star"):
             raise ValueError("pair_topology must be 'all_pairs' or 'chain_star'")
+
     def fingerprint(self) -> str:
-        """Stable hash of the semantics-bearing fields, used by the stage
-        checkpoint manifest to decide whether a cached stage is reusable."""
-        sem = asdict(self)
-        # scale knobs don't change results -> excluded from the fingerprint
-        for k in (
-            "shuffle_partitions",
-            "max_records_per_batch",
-            "sketch_repartition",
-        ):
-            sem.pop(k)
-        return hashlib.sha256(json.dumps(sem, sort_keys=True).encode()).hexdigest()[:16]
+        """Stable hash of the fields, used by the stage checkpoint manifest
+        to decide whether a cached stage is reusable."""
+        sem = json.dumps(asdict(self), sort_keys=True)
+        return hashlib.sha256(sem.encode()).hexdigest()[:16]
 
 
 DEFAULT_CONFIG = DedupeConfig()

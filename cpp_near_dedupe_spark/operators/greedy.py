@@ -56,7 +56,6 @@ def greedy_resolve(
     edges: DataFrame,
     cfg: DedupeConfig,
     max_rounds: int = 60,
-    distinct_pairs: bool = False,
 ) -> DataFrame:
     """docs × duplicate edges (a, b) → (id, is_kept) for ALL docs, under
     the reference's arrival-order semantics (arrival order = ascending
@@ -72,20 +71,14 @@ def greedy_resolve(
     is what the per-component task materializes — a dense small-node
     component is routed to the frontier engine too).
 
-    ``distinct_pairs=True`` skips the canonicalizing dedup shuffle when
-    the caller guarantees the input edges are already distinct as
-    UNORDERED pairs (the pipeline's pair generators end in
-    dropDuplicates, so their edge sets qualify) — same contract as
-    ``connected_components(distinct_pairs=...)``. Duplicate edges would
-    not change any keep/drop decision (the drop rule is an existence
-    test), only inflate the joins, so the flag is a physical choice.
+    Edges are not deduplicated: a repeated edge cannot change any
+    keep/drop decision (the drop rule is an existence test), and the
+    pipeline's pair generators end in dropDuplicates anyway.
     """
     id_col = cfg.id_col
     e = edges.select(
         F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
     ).filter(F.col("a") != F.col("b"))
-    if not distinct_pairs:
-        e = e.distinct()
     dropped = _component_dropped(e.localCheckpoint(eager=False), max_rounds)
     return docs.select(F.col(id_col)).join(
         dropped.withColumnRenamed("id", id_col), id_col, "left_anti"

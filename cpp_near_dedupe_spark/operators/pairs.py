@@ -246,15 +246,9 @@ def _chain_star_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
     through the session cache registry so the sampled aggregation runs
     once across the broadcast branches.
 
-    Adaptive plan choice (one tiny driver action over the cached hot-key
-    aggregate — the AQE-style runtime decision Spark cannot make for
-    window partitions): when NO bucket exceeds the cap — the common case
-    on well-behaved corpora — the whole salting apparatus (broadcast
-    routing join, the sub-min/global-min link aggregates, the union) is
-    dead weight costing two extra passes over the bands table, so the
-    plain single-window plan is emitted instead. Measured r4 A/B at
-    sf0.1: always-salted 1.85 s vs bypassed ~1.4 s on a corpus with no
-    hot buckets.
+    One plan whatever the data, and building it starts no Spark job: with
+    no hot bucket every row gets salt 0 and the link aggregates are empty,
+    so the pairs are exactly the plain per-bucket window's.
     """
     from ..cache import track
 
@@ -281,14 +275,6 @@ def _chain_star_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
         .agg((F.count("*") * sample_mod).alias("bucket_size"))
         .filter(F.col("bucket_size") > cap)
     )
-
-    # adaptive bypass: nothing hot -> plain per-bucket window (see
-    # docstring). The count materializes the cached hot_keys, so the hot
-    # branch below reuses it without recomputing the aggregation.
-    if hot_keys.limit(1).count() == 0:
-        return _chain_star_window(
-            bands.select("band_key", id_col), id_col, ["band_key"]
-        ).dropDuplicates(["a", "b"])
 
     # ONE broadcast left join routes every row: cold rows (the vast
     # majority) get salt 0, i.e. the plain per-bucket window; over-cap rows

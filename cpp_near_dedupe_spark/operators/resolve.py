@@ -28,21 +28,31 @@ def resolve_clusters(
     Docs absent from ``clusters`` (no duplicate edge) are singleton
     clusters of themselves and are kept.
 
-    Physical shape: only the minimum of each cluster is needed, so the
+    Physical shape: ONE left join of ``docs(id[, order])`` with
+    ``clusters`` reads the clusters once (one shuffle of them on id, which
+    every branch below reuses). Only the minimum of each cluster is needed, so the
     representative is a hash aggregation ``groupBy(cluster_id).min(struct
-    (order, id))`` joined back on cluster_id — partial-aggregated map-side,
-    no sort anywhere. (A row_number window over cluster_id would sort every
-    document at the resolve stage; at 10^11 docs that global sort IS the
-    job.) Docs not in any cluster skip both shuffles entirely: they are
-    kept by definition and are unioned back in without touching the agg.
+    (order, id))`` over the clustered rows, joined back on cluster_id —
+    partial-aggregated map-side, no sort anywhere. (A row_number window
+    over cluster_id would sort every document at the resolve stage; at
+    10^11 docs that global sort IS the job.) Rows the join leaves without
+    a cluster are singletons: kept by definition, they skip the
+    aggregation and its join-back.
     """
     id_col = cfg.id_col
     order_col = cfg.order_col or id_col
     cols = [id_col] if order_col == id_col else [id_col, order_col]
-    member = clusters.withColumnRenamed("id", id_col)
-    # inner join: only docs that appear in a duplicate cluster go through
-    # the agg/join path — the (vast) singleton majority bypasses it
-    clustered = docs.select(*cols).join(member, id_col, "inner")
+    # Spark reuses an exchange only between identical subtrees. The
+    # explicit repartition gives the branches an exchange to share
+    # whichever side a join broadcasts. The clustered branch's not-null
+    # filter turns its copy of the join into an inner join and pushes that
+    # filter into the clusters side, so it is applied up front: every
+    # branch then shuffles the same subtree, computed once.
+    member = clusters.filter(F.col("cluster_id").isNotNull()).repartition("id")
+    joined = docs.select(*cols).join(
+        member.withColumnRenamed("id", id_col), id_col, "left"
+    )
+    clustered = joined.filter(F.col("cluster_id").isNotNull())
     ord_expr = (
         F.col(id_col)
         if order_col == id_col
@@ -57,7 +67,7 @@ def resolve_clusters(
         "cluster_id",
         (F.col(id_col) == rep_id).alias("is_kept"),
     )
-    singletons = docs.select(id_col).join(member, id_col, "left_anti").select(
+    singletons = joined.filter(F.col("cluster_id").isNull()).select(
         F.col(id_col),
         F.col(id_col).alias("cluster_id"),
         F.lit(True).alias("is_kept"),

@@ -283,13 +283,13 @@ def run_pipeline(
     # Caching single-consumer stages just doubles their memory traffic —
     # measured slower. bands feeds the hot-bucket aggregate (chain_star's
     # 2% sample, all_pairs' exact bucket_stats) plus the pair branches
-    # under both topologies; clusters feeds resolve's clustered-join, reps
-    # aggregation AND the singleton anti-join (3 consumers).
-    # "resolved" is NOT here (r6): every caller consumes it exactly once
+    # under both topologies. clusters is NOT here: resolve_clusters reads
+    # it through one left join whose exchange all its branches share.
+    # Nor is "resolved" (r6): every caller consumes it exactly once
     # (audited: entry/queries/dedupe_output all reference it in a single
     # plan branch), so persisting it only added a cache write of the
     # widest per-doc relation.
-    multi_consumer = {"signatures", "sig_reps", "bands", "clusters"}
+    multi_consumer = {"signatures", "sig_reps", "bands"}
 
     def stage(name: str, make, notes=dict) -> DataFrame:
         # ``notes``: extra manifest fields, computed only when written

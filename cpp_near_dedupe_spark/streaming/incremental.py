@@ -261,6 +261,7 @@ def dedupe_increment(
 
     fam = hash_family(family)
     cfg = fam.config(cfg)
+    cfg.validate()
     id_col = cfg.id_col
 
     # multi-consumer intermediates: the signatures feed the within-batch
@@ -290,14 +291,14 @@ def dedupe_increment(
             )
         else:
             # dedupe the batch against itself (pipeline stages, no
-            # collapse); resolve_clusters reads the clusters three times
+            # collapse); resolve_clusters reads the clusters once
             pairs_in = candidate_pairs(bands_new, cfg)
             edges_in = fam.score(pairs_in, sigs_new, cfg).filter(
                 F.col("jaccard") >= F.lit(cfg.threshold)
             )
-            clusters = track(connected_components(
+            clusters = connected_components(
                 edges_in.select("a", "b"), cfg.cc_max_iterations, distinct_pairs=True
-            ))
+            )
             resolved = resolve_clusters(new_docs, clusters, cfg)
             survivor_ids = resolved.filter(F.col("is_kept")).select(id_col)
             if dups:
@@ -378,14 +379,7 @@ def _dedupe_increment_strict(
     edges_in = score_fn(pairs_in, sigs_new, cfg).filter(
         F.col("jaccard") >= F.lit(cfg.threshold)
     )
-    # distinct_pairs: candidate_pairs ends in dropDuplicates and the
-    # scoring joins are 1:1 per pair
-    out = greedy_resolve(
-        live_docs.select(id_col),
-        edges_in.select("a", "b"),
-        cfg,
-        distinct_pairs=True,
-    )
+    out = greedy_resolve(live_docs.select(id_col), edges_in.select("a", "b"), cfg)
     return out.filter(F.col("is_kept")).select(id_col)
 
 

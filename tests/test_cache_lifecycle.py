@@ -66,7 +66,7 @@ def test_pipeline_caches_are_tracked_and_releasable(spark):
     mid = _persistent_rdd_ids(spark)
     assert mid - before
     n = release_all()
-    assert n >= 4  # signatures, sig_reps, bands, clusters, resolved
+    assert n >= 4  # signatures, sig_reps, bands, chain_star's hot keys
     assert tracked_count() == 0
     # NOTE: localCheckpoint blocks (CC plan truncation) also appear in
     # getPersistentRDDs; those are lineage-truncation storage the JVM

@@ -351,6 +351,30 @@ def test_incremental_crawl_equals_kept_minus_kept_matches(spark, tmp_path, famil
     assert dropped_by_state > 0
 
 
+@pytest.mark.parametrize("field", ["bands", "hot_band_cap", "num_hashes", "shingle_k"])
+def test_config_sizes_below_one_are_rejected(spark, tmp_path, field):
+    """Every size a CLI flag reaches must be >= 1: validate() raises
+    ValueError (not ZeroDivisionError, nor a later Spark failure), and
+    dedupe_increment validates before it plans anything."""
+    import dataclasses
+
+    from cpp_near_dedupe_spark.plans.run_pipeline import main
+    from cpp_near_dedupe_spark.streaming.incremental import (
+        SignatureState,
+        dedupe_increment,
+    )
+
+    bad = dataclasses.replace(CFG, **{field: 0})
+    with pytest.raises(ValueError, match=field):
+        bad.validate()
+    state = SignatureState(spark, str(tmp_path / "state"))
+    with pytest.raises(ValueError, match=field):
+        dedupe_increment(spark, _mk_docs(spark, [(1, "a b c d e f")]), state, bad)
+    flag = "--" + field.replace("_", "-")
+    with pytest.raises(ValueError, match=field):
+        main(["--input", "unused", "--output", "unused", flag, "0"])
+
+
 def _tree_bytes(root):
     import pathlib
 

@@ -127,6 +127,30 @@ def test_candidate_pairs_chain_star_topology(spark):
     assert touched == {1, 2, 3, 4, 5, 8, 9}
 
 
+def test_chain_star_plan_build_starts_no_job(spark):
+    """Building the chain_star pair plan is pure planning: the hot-key
+    routing rides the plan, no driver action picks between plans."""
+    from cpp_near_dedupe_spark.cache import release_all
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bands = spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.lit(0).alias("band_id"),
+        (F.col("id") % 7).alias("band_key"),
+    )
+    cfg = DedupeConfig(id_col="doc_id", pair_topology="chain_star")
+    try:
+        bus.waitUntilEmpty()
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        pairs = candidate_pairs(bands, cfg)
+        bus.waitUntilEmpty()
+        assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
+        assert pairs.count() == sum(2 * len(range(k, 200, 7)) - 3 for k in range(7))
+    finally:
+        release_all()
+
+
 def test_candidate_pairs_hot_bucket_star_routing(spark):
     """Over-cap buckets: all pairs among the hash-selected head
     (portable_salt(id, ceil(size/cap)) == 0) plus (bucket-min, doc) star
@@ -337,3 +361,38 @@ def test_resolve_and_output(spark):
     kept = dedupe_output(docs, resolved, CFG)
     assert {r.doc_id for r in kept.collect()} == {1, 3, 4}
     assert kept.columns == docs.columns  # full passthrough schema
+
+
+@pytest.mark.parametrize("order_col", [None, "ts"])
+def test_resolve_computes_clusters_once(spark, order_col):
+    """resolve_clusters reads ``clusters`` through one join: the clustered
+    and singleton branches share its exchange, so an uncached clusters
+    plan runs once. The clusters come from an RDD, as connected
+    components' do (a localCheckpoint), so Spark knows no size for them
+    and broadcasts the docs side wherever it may."""
+    docs = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(1, 8), "ts": range(7, 0, -1)}),
+        schema="doc_id long, ts long",
+    )
+    runs = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        runs.add(1)
+        yield from batches
+
+    clusters = (
+        spark.createDataFrame(
+            spark.sparkContext.parallelize([(1, 1), (2, 1), (4, 4), (5, 4)]),
+            schema="id long, cluster_id long",
+        )
+        .coalesce(1)
+        .mapInPandas(counted, "id long, cluster_id long")
+    )
+    cfg = DedupeConfig(id_col="doc_id", order_col=order_col)
+    rows = {
+        r.doc_id: r.is_kept for r in resolve_clusters(docs, clusters, cfg).collect()
+    }
+    # ts descends with the id, so the order column flips each cluster's keeper
+    keepers = {1, 4} if order_col is None else {2, 5}
+    assert rows == {i: i in keepers or i in (3, 6, 7) for i in range(1, 8)}
+    assert runs.value == 1
