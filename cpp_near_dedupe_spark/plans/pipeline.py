@@ -108,6 +108,22 @@ def hash_family(name: str) -> HashFamily:
         ) from None
 
 
+def load_manifest(path: str) -> dict:
+    """The JSON manifest at ``path``; empty when none was saved yet."""
+    if os.path.exists(path):
+        with open(path) as f:
+            return json.load(f)
+    return {}
+
+
+def save_manifest(path: str, m: dict) -> None:
+    """Replace the manifest at ``path`` in one ``os.replace``."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(m, f, indent=1)
+    os.replace(tmp, path)
+
+
 class CheckpointStore:
     """Parquet-directory stage store with a JSON manifest.
 
@@ -132,37 +148,25 @@ class CheckpointStore:
         os.makedirs(root, exist_ok=True)
         self._manifest_path = os.path.join(root, "manifest.json")
 
-    def _manifest(self) -> dict:
-        if os.path.exists(self._manifest_path):
-            with open(self._manifest_path) as f:
-                return json.load(f)
-        return {}
-
-    def _save_manifest(self, m: dict) -> None:
-        tmp = self._manifest_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1)
-        os.replace(tmp, self._manifest_path)
-
     def path(self, stage: str) -> str:
         return os.path.join(self.root, stage)
 
     def is_complete(self, stage: str, fingerprint: str) -> bool:
-        e = self._manifest().get(stage) or {}
+        e = load_manifest(self._manifest_path).get(stage) or {}
         return e.get("fingerprint") == fingerprint and "schema" in e and os.path.exists(
             os.path.join(self.path(stage), "_SUCCESS")
         )
 
     def read(self, stage: str) -> DataFrame:
-        schema = StructType.fromJson(self._manifest()[stage]["schema"])
+        schema = StructType.fromJson(load_manifest(self._manifest_path)[stage]["schema"])
         return self.spark.read.schema(schema).parquet(self.path(stage))
 
     def write(self, stage: str, df: DataFrame, fingerprint: str, **notes) -> DataFrame:
         """Write ``df`` as ``stage``; ``notes`` join its manifest entry."""
         t0 = time.time()
-        m = self._manifest()
+        m = load_manifest(self._manifest_path)
         if m.pop(stage, None) is not None:
-            self._save_manifest(m)
+            save_manifest(self._manifest_path, m)
         df.write.mode("overwrite").parquet(self.path(stage))
         rows = self._record_file_rows(stage)
         m[stage] = {
@@ -173,7 +177,7 @@ class CheckpointStore:
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "schema": df.schema.jsonValue(),
         }
-        self._save_manifest(m)
+        save_manifest(self._manifest_path, m)
         # the written schema is known: the read-back runs no inference job
         return self.spark.read.schema(df.schema).parquet(self.path(stage))
 

@@ -5,15 +5,20 @@ scored against the retained uniques sharing a band key; matches are dropped,
 survivors join the retained set (`/root/reference/CPPDeduper/
 ComparerThread.h:271-414`). Batch Spark replays that per micro-batch:
 
-* state = (signatures, bands) parquet directories — the Spark analogue of
-  the reference's hash arena + LSH maps (`HashTable.h:24-109`,
-  `LSHBandHashMap.h:234-358`), except durable and append-only.
+* state = an epoch log of (signatures, bands) parquet directories — the
+  Spark analogue of the reference's hash arena + LSH maps
+  (`HashTable.h:24-109`, `LSHBandHashMap.h:234-358`), except durable and
+  append-only. A JSON manifest lists the committed epochs, as an Iceberg
+  snapshot lists a table's files; ``compact`` merges old epochs, as
+  Iceberg's ``rewrite_data_files`` does.
 * a new batch is deduped *within itself* (the pipeline's pairs →
   edges → clusters → resolve chain over the batch's own bands, without
   ``run_pipeline``'s identical-sketch collapse) while a second driver
   thread scores the whole batch against state candidates (a doc's match
   depends only on its own signature, bands and the state); survivors
-  matching state are dropped; the rest are appended to state.
+  matching state are dropped; the rest are committed to state as the
+  batch's epoch. A batch whose epoch is already committed is a replay
+  and returns that epoch's kept set without touching the state.
 * the survivor ids are materialized before the append, off the state's
   lineage: the appends and the returned frame read them, so nothing
   collected after the append re-runs the state match.
@@ -25,15 +30,20 @@ transitive-clustering keep-first rule applies (SURVEY.md §2 C1).
 keep/drop decisions (state-match elimination + arrival-order greedy over
 the remainder — see dedupe_increment).
 
-``stream_dedupe`` wires this into Structured Streaming via foreachBatch —
-the recommended pattern for stateful sinks with exactly-once parquet
-output; the state directories make restarts idempotent per epoch.
+``stream_dedupe`` wires this into Structured Streaming via foreachBatch,
+keyed on the batch id: state epoch N and output dir ``epoch=N`` belong to
+micro-batch N, so a batch the query re-runs after a crash writes the same
+output and no second state copy.
 """
 
 from __future__ import annotations
 
+import fcntl
+import glob
 import os
+import shutil
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
@@ -44,22 +54,30 @@ from ..config import DedupeConfig
 from ..operators.pairs import candidate_pairs
 from ..operators.clustering import connected_components
 from ..operators.resolve import resolve_clusters
-from ..plans.pipeline import hash_family
+from ..plans.pipeline import hash_family, load_manifest, save_manifest
+
+_KINDS = ("signatures", "bands")
 
 
 class SignatureState:
-    """Durable retained-unique store: signatures + exploded bands.
+    """Durable retained-unique store: signatures + exploded bands, as an
+    epoch log.
 
-    Filesystem assumption: the state root must be a SHARED POSIX
-    filesystem (NFS/Lustre/local in tests) — compaction and crash
-    recovery rely on atomic same-directory ``os.rename`` and on the
-    driver seeing the files executors wrote, the same assumption the
-    reference's output writer makes (`DupeResolverThread.h:138-196`).
-    On an object store (S3/GCS) rename is copy+delete and not atomic;
-    the intended deployment there is the Iceberg-backed
-    ``CheckpointStore`` seam (plans/pipeline.py) where the table commit
-    protocol replaces the rename dance and ``compact`` maps to
-    ``rewrite_data_files``."""
+    Each committed epoch (one batch's survivors) is a pair of parquet dirs,
+    ``signatures/epoch=N`` and ``bands/epoch=N``. ``manifest.json`` lists
+    the committed entries in epoch order with their dirs and schemas;
+    reads see only listed dirs. An epoch is listed only after both its
+    writes, in one ``os.replace`` of the manifest, so a crash mid-append
+    lists nothing and the rerun overwrites the half-written dirs. In
+    Iceberg terms the manifest is a table snapshot, ``append`` a fast
+    append and ``compact`` ``rewrite_data_files``.
+
+    ``append`` and ``compact`` are single-writer: each holds a non-blocking
+    ``flock`` on ``_lock`` at the root (the kernel drops it when the holder
+    dies), and a second writer raises ``RuntimeError``. The root must be a
+    shared POSIX filesystem, as for the reference's output writer
+    (`DupeResolverThread.h:138-196`): the driver sees the files executors
+    wrote, and ``os.replace`` is atomic."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -67,164 +85,105 @@ class SignatureState:
         os.makedirs(root, exist_ok=True)
         self.sig_path = os.path.join(root, "signatures")
         self.bands_path = os.path.join(root, "bands")
+        self._manifest_path = os.path.join(root, "manifest.json")
+
+    def _entries(self) -> list[dict]:
+        return load_manifest(self._manifest_path).get("entries", [])
 
     def exists(self) -> bool:
-        self._recover(self.sig_path)
-        self._recover(self.bands_path)
-        return os.path.exists(os.path.join(self.sig_path, "_SUCCESS"))
+        return bool(self._entries())
 
-    def signatures(self, schema: StructType | None = None) -> DataFrame:
-        return self._read(self.sig_path, schema)
+    def signatures(self) -> DataFrame:
+        return self._read("signatures", self._entries())
 
-    def bands(self, schema: StructType | None = None) -> DataFrame:
-        return self._read(self.bands_path, schema)
+    def bands(self) -> DataFrame:
+        return self._read("bands", self._entries())
 
-    def _read(self, path: str, schema: StructType | None) -> DataFrame:
-        # the appended frames' schema, if known, saves the inference job
-        self._recover(path)
-        reader = self.spark.read
-        return (reader.schema(schema) if schema else reader).parquet(path)
+    def committed(self, epoch: int | None) -> DataFrame | None:
+        """The signatures committed with ``epoch``, None if it is not
+        listed. After ``compact`` merged it, those of its whole merge."""
+        entries = [e for e in self._entries() if epoch in e["epochs"]]
+        return self._read("signatures", entries) if entries else None
 
-    def append(self, signatures: DataFrame, bands: DataFrame) -> None:
-        # the two appends are independent jobs on different directories;
-        # submitting them from two driver threads lets the second job's
-        # tasks back-fill executors freed by the first one's tail instead
-        # of paying two full job latencies back to back. The writes are
-        # wrapped here, on the calling thread, so their jobs run in its
-        # job group. Callers pass frames over materialized survivor ids,
-        # so neither write recomputes them.
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            fs = [
-                ex.submit(
-                    inheritable_thread_target(self.spark)(
-                        lambda df=df, path=path: df.write.mode("append").parquet(path)
-                    )
+    def _read(self, kind: str, entries: list[dict]) -> DataFrame:
+        # the schema recorded at append: the read runs no inference job
+        schema = StructType.fromJson(entries[-1]["schema"][kind])
+        paths = [os.path.join(self.root, e[kind]) for e in entries]
+        return self.spark.read.schema(schema).parquet(*paths)
+
+    def append(self, signatures: DataFrame, bands: DataFrame, epoch: int | None = None) -> None:
+        """Commit ``signatures`` and ``bands`` as ``epoch``, which must be
+        above every listed epoch; None takes the next number."""
+        with self._writer():
+            entries = self._entries()
+            last = entries[-1]["epochs"][-1] if entries else -1
+            epoch = last + 1 if epoch is None else epoch
+            if epoch <= last:
+                raise ValueError(
+                    f"epoch {epoch} is not above the newest committed epoch {last}"
                 )
-                for df, path in (
-                    (signatures, self.sig_path),
-                    (bands, self.bands_path),
-                )
-            ]
-            for f in fs:
-                f.result()
+            entry = self._write(f"epoch={epoch}", [epoch], signatures, bands)
+            save_manifest(self._manifest_path, {"entries": entries + [entry]})
 
     def compact(self, target_partitions: int | None = None) -> None:
-        """Rewrite the state dirs into ``target_partitions`` files each.
-        Every micro-batch append adds a handful of small files; after many
-        epochs the candidate join against state pays one scan task per
-        tiny file. Compaction is an offline maintenance pass (the Iceberg
-        analogue is rewrite_data_files).
-
-        Crash safety: the swap is two renames, not one atomic operation —
-        a crash between them leaves the live dir missing but the previous
-        state intact under ``_old``; ``_recover()`` (called here and on
-        every read) renames it back. Stale ``_compacting``/``_old``
-        leftovers from prior crashes are cleared up-front, so compact
-        always starts from a clean slate instead of raising.
-
-        Concurrency: compaction is single-writer, enforced with an
-        O_EXCL lock file at the state root — two simultaneous compacts
-        would race on the same ``_compacting``/``_old`` renames. A second
-        caller raises ``RuntimeError`` immediately (maintenance jobs
-        should serialize, not queue). A lock left behind by a crashed
-        compact is broken after ``lock_timeout_sec`` (the dead process
-        cannot refresh its mtime); the break itself is atomic — the stale
-        lock is renamed to a caller-unique name first, so of two waiters
-        observing the same stale lock exactly one wins the rename and
-        breaks it, the other sees FileNotFoundError and retries O_EXCL
-        against whatever lock the winner creates. A LIVE holder refreshes
-        the lock mtime after each long Spark rewrite (once per state dir),
-        so ``lock_timeout_sec`` bounds a single directory rewrite, not the
-        whole compact — a legitimately slow compact is not broken mid-run."""
-        import shutil
-
-        self._acquire_lock()
-        try:
-            for path in (self.sig_path, self.bands_path):
-                self._recover(path)
-                tmp, old = path + "_compacting", path + "_old"
-                shutil.rmtree(tmp, ignore_errors=True)  # stale half-written rewrite
-                if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                    continue
-                df = self.spark.read.parquet(path)
-                n = target_partitions or max(
-                    2, self.spark.sparkContext.defaultParallelism
+        """Merge every listed entry but the newest into one base entry of
+        ``target_partitions`` files per kind (default: the session's
+        parallelism, at least 2): each append adds a few small files, and
+        the state match pays one scan task per file. The newest entry stays
+        its own, as the only epoch a stream can replay (Structured Streaming
+        re-runs only the batch whose commit is missing). After the manifest
+        swap every unlisted dir is deleted, also those a crashed append or
+        compact left, so compact between batches."""
+        with self._writer():
+            entries = self._entries()
+            old = entries[:-1]
+            if len(old) >= 2:
+                n = target_partitions or max(2, self.spark.sparkContext.defaultParallelism)
+                base = self._write(
+                    f"base={old[-1]['epochs'][-1]}",
+                    [ep for e in old for ep in e["epochs"]],
+                    self._read("signatures", old).repartition(n),
+                    self._read("bands", old).repartition(n),
                 )
-                df.repartition(n).write.mode("overwrite").parquet(tmp)
-                self._refresh_lock()  # still alive: the rewrite was the slow part
-                os.rename(path, old)
-                os.rename(tmp, path)  # crash before this line -> _recover undoes
-                shutil.rmtree(old)
-        finally:
-            self._release_lock()
+                entries = [base, entries[-1]]
+                save_manifest(self._manifest_path, {"entries": entries})
+            listed = {os.path.join(self.root, e[k]) for e in entries for k in _KINDS}
+            for kind in _KINDS:
+                for path in glob.glob(os.path.join(self.root, kind, "*")):
+                    if path not in listed:
+                        shutil.rmtree(path)
 
-    # single-writer compaction lock -------------------------------------
-    lock_timeout_sec: float = 3600.0
+    def _write(self, name: str, epochs: list[int], signatures: DataFrame, bands: DataFrame) -> dict:
+        """Write ``signatures/<name>`` and ``bands/<name>``; returns their
+        manifest entry. Two driver threads submit the two writes, so the
+        second job's tasks back-fill executors freed by the first one's
+        tail; wrapped on the calling thread, both run in its job group.
+        Callers pass frames over materialized ids: no write recomputes them."""
+        entry = {"epochs": epochs}
+        frames = dict(zip(_KINDS, (signatures, bands)))
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            fs = []
+            for kind, df in frames.items():
+                entry[kind] = f"{kind}/{name}"
+                path = os.path.join(self.root, entry[kind])
+                write = lambda df=df, path=path: df.write.mode("overwrite").parquet(path)
+                fs.append(ex.submit(inheritable_thread_target(self.spark)(write)))
+            for f in fs:
+                f.result()
+        entry["schema"] = {k: df.schema.jsonValue() for k, df in frames.items()}
+        return entry
 
-    @property
-    def _lock_path(self) -> str:
-        return os.path.join(self.root, "_compact.lock")
-
-    def _acquire_lock(self) -> None:
-        import time
-        import uuid
-
-        lock = self._lock_path
-        try:
-            if (
-                os.path.exists(lock)
-                and time.time() - os.path.getmtime(lock) > self.lock_timeout_sec
-            ):
-                # Atomic stale-break: rename-then-unlink. Of two waiters
-                # that both observed the stale mtime, exactly one rename
-                # succeeds (rename of an already-moved file raises); the
-                # loser falls through to O_EXCL and collides with whatever
-                # lock the winner creates next. A plain unlink here would
-                # let the second waiter delete the FIRST waiter's freshly
-                # created lock (the TOCTOU the advisor flagged).
-                grave = f"{lock}.stale-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-                os.rename(lock, grave)
-                os.unlink(grave)
-        except FileNotFoundError:
-            pass
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise RuntimeError(
-                f"another compact holds {lock}; state compaction is "
-                "single-writer (serialize maintenance jobs, or remove the "
-                "lock file if the holder is known dead)"
-            )
-        with os.fdopen(fd, "w") as f:
-            f.write(str(os.getpid()))
-
-    def _refresh_lock(self) -> None:
-        """Holder heartbeat: bump the lock mtime so a compact whose SINGLE
-        slow step stays under ``lock_timeout_sec`` is never stale-broken
-        mid-run even when the whole compact takes longer."""
-        try:
-            os.utime(self._lock_path)
-        except FileNotFoundError:
-            pass  # lock was force-removed; the renames still race-protect via _recover
-
-    def _release_lock(self) -> None:
-        try:
-            os.unlink(self._lock_path)
-        except FileNotFoundError:
-            pass
-
-    @staticmethod
-    def _recover(path: str) -> None:
-        """If a prior compact crashed between its two renames (live dir
-        missing, ``_old`` present), restore the previous state."""
-        import shutil
-
-        old = path + "_old"
-        if os.path.exists(old):
-            if os.path.exists(path):
-                shutil.rmtree(old)  # crash after the swap completed
-            else:
-                os.rename(old, path)
+    @contextmanager
+    def _writer(self):
+        """Hold the single-writer lock; closing the file releases it."""
+        with open(os.path.join(self.root, "_lock"), "a") as f:
+            try:
+                fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                raise RuntimeError(
+                    f"another writer holds {f.name}: one writer at a time"
+                ) from None
+            yield
 
 
 def dedupe_increment(
@@ -234,9 +193,14 @@ def dedupe_increment(
     cfg: DedupeConfig,
     strict_order: bool = False,
     family: str = "parity",
+    epoch: int | None = None,
 ) -> DataFrame:
     """Process one batch; returns the surviving (kept) docs with full
-    schema, and appends their signatures to the state.
+    schema, and commits their signatures to the state as ``epoch`` (None:
+    the next number). An ``epoch`` the state already lists is a replay:
+    it runs no state match and writes nothing, and returns ``new_docs``
+    semi-joined with the ids that epoch committed — the kept set the
+    first run returned.
 
     ``strict_order=False`` (default): within-batch transitive clustering
     (keep-first per component), then survivors are dropped if they match
@@ -263,6 +227,11 @@ def dedupe_increment(
     cfg = fam.config(cfg)
     cfg.validate()
     id_col = cfg.id_col
+
+    done = state.committed(epoch)
+    if done is not None:
+        # materialized, as on the first run: the frame never reads the state
+        return new_docs.join(done.select(id_col).localCheckpoint(), id_col, "left_semi")
 
     # multi-consumer intermediates: the signatures feed the within-batch
     # scoring, the state scoring, and the state append; the bands feed
@@ -313,6 +282,7 @@ def dedupe_increment(
     state.append(
         sigs_new.join(survivor_ids, id_col, "left_semi"),
         bands_new.join(survivor_ids, id_col, "left_semi"),
+        epoch,
     )
     return new_docs.join(survivor_ids, id_col, "left_semi")
 
@@ -326,27 +296,22 @@ def _state_matches(
 ) -> DataFrame:
     """Ids of the (sigs, bands) docs that share a band with a retained
     state doc and score jaccard >= threshold against it (reference
-    semantics: incoming doc vs retained uniques sharing >=1 band). The
-    state is read with the schemas of ``sigs`` and ``bands``: its files
-    were appended from frames of the same schemas."""
+    semantics: incoming doc vs retained uniques sharing >=1 band)."""
     id_col = cfg.id_col
     cand = (
         bands.select("band_id", "band_key", F.col(id_col).alias("a"))
         .join(
-            state.bands(bands.schema).select(
-                "band_id", "band_key", F.col(id_col).alias("b")
-            ),
+            state.bands().select("band_id", "band_key", F.col(id_col).alias("b")),
             ["band_id", "band_key"],
         )
-        # a != b: the match runs once over the whole batch, before this
-        # batch's append, so the state never holds the batch's own docs
-        # here. The guard only keeps a doc whose id is already retained
-        # (a replayed epoch) from matching itself.
+        # a != b: a doc is never scored against its own id. The match runs
+        # before this batch's append, and a replayed epoch returns before
+        # the match, so the only such pair is an id re-sent in a later epoch.
         .filter(F.col("a") != F.col("b"))
         .select("a", "b")
         .distinct()
     )
-    all_sigs = sigs.unionByName(state.signatures(sigs.schema))
+    all_sigs = sigs.unionByName(state.signatures())
     matches = score_fn(cand, all_sigs, cfg).filter(
         F.col("jaccard") >= F.lit(cfg.threshold)
     )
@@ -393,14 +358,22 @@ def stream_dedupe(
     strict_order: bool = False,
 ):
     """Structured Streaming wrapper: readStream source → per-micro-batch
-    incremental dedupe → parquet sink. Returns the StreamingQuery."""
+    incremental dedupe → parquet sink. Returns the StreamingQuery.
+
+    Micro-batch ``epoch_id`` commits state epoch ``epoch_id`` and
+    overwrites ``output_dir/epoch=<epoch_id>``, so a batch the query
+    re-runs after a crash rewrites the same kept set and leaves the state
+    as it is. The state's epochs are this query's batch ids: keep one
+    checkpoint per state dir."""
     state = SignatureState(spark, state_dir)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         from ..cache import release_all
 
-        kept = dedupe_increment(spark, batch_df, state, cfg, strict_order=strict_order)
-        kept.write.mode("append").parquet(output_dir)
+        kept = dedupe_increment(
+            spark, batch_df, state, cfg, strict_order=strict_order, epoch=epoch_id
+        )
+        kept.write.mode("overwrite").parquet(os.path.join(output_dir, f"epoch={epoch_id}"))
         # the epoch's tracked sketch/band persists die with the epoch — a
         # long-running stream must not accumulate one cached RDD pair per
         # micro-batch (cache.py contract: the materializing caller releases)

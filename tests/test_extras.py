@@ -494,40 +494,161 @@ def test_stream_dedupe_available_now(spark, tmp_path):
 
 
 def test_signature_state_compact(spark, tmp_path):
-    """Compaction rewrites many small append files into few, preserving
-    content exactly; results after compaction are unchanged."""
+    """Compaction merges every epoch but the newest into one base of few
+    files, preserving content exactly. The newest epoch stays its own
+    entry, byte for byte, so replaying it is still a no-op; the state
+    serves new batches after the swap."""
+    import glob
     import os
 
-    from cpp_near_dedupe_spark.config import DedupeConfig
+    from cpp_near_dedupe_spark.cache import release_all
     from cpp_near_dedupe_spark.streaming.incremental import (
         SignatureState,
         dedupe_increment,
     )
 
-    cfg = DedupeConfig(id_col="doc_id", text_col="text")
     state = SignatureState(spark, str(tmp_path / "state"))
-    texts = [" ".join(f"w{i}x{j % 29}" for j in range(120)) for i in range(12)]
-    for batch in range(3):
-        docs = spark.createDataFrame(
-            [(batch * 4 + i, texts[batch * 4 + i]) for i in range(4)],
-            "doc_id long, text string",
+    texts = [" ".join(f"w{i}x{j % 29}" for j in range(120)) for i in range(16)]
+    batch = lambda b: _mk_docs(spark, [(b * 4 + i, texts[b * 4 + i]) for i in range(4)])  # noqa: E731
+    part_files = lambda name: glob.glob(os.path.join(state.sig_path, name, "*.parquet"))  # noqa: E731
+    try:
+        for b in range(4):
+            kept3 = sorted(r.doc_id for r in dedupe_increment(spark, batch(b), state, CFG).collect())
+        before_sigs = state.signatures().toPandas().sort_values("doc_id")
+        newest = _tree_bytes(os.path.join(state.sig_path, "epoch=3"))
+        n_files_before = sum(len(part_files(f"epoch={e}")) for e in range(3))
+        state.compact(target_partitions=2)
+        after_sigs = state.signatures().toPandas().sort_values("doc_id")
+        assert sorted(os.listdir(state.sig_path)) == ["base=2", "epoch=3"]
+        assert sorted(os.listdir(state.bands_path)) == ["base=2", "epoch=3"]
+        assert len(part_files("base=2")) <= 2 < n_files_before
+        assert _tree_bytes(os.path.join(state.sig_path, "epoch=3")) == newest
+        assert list(before_sigs.doc_id) == list(after_sigs.doc_id) == list(range(16))
+        assert [list(s) for s in before_sigs.signature] == [list(s) for s in after_sigs.signature]
+        # the newest epoch still replays to its first kept set, writing nothing
+        tree = _tree_bytes(state.root)
+        again = dedupe_increment(spark, batch(3), state, CFG, epoch=3)
+        assert sorted(r.doc_id for r in again.collect()) == kept3 == [12, 13, 14, 15]
+        assert _tree_bytes(state.root) == tree
+        # state still serves new batches after the swap
+        more = _mk_docs(spark, [(100, texts[0])])
+        assert dedupe_increment(spark, more, state, CFG).count() == 0  # dupe of doc 0
+    finally:
+        release_all()
+
+
+def test_incremental_epoch_replay_returns_same_ids(spark, tmp_path):
+    """A batch run again with an epoch the state already lists returns the
+    ids its first run kept and writes nothing; an epoch below the newest
+    that was never committed is refused."""
+    from cpp_near_dedupe_spark.cache import release_all
+    from cpp_near_dedupe_spark.streaming.incremental import (
+        SignatureState,
+        dedupe_increment,
+    )
+
+    base = " ".join(f"w{i % 101}" for i in range(400))
+    new = " ".join(f"z{i % 83}" for i in range(400))
+    other = " ".join(f"q{i % 79}" for i in range(400))
+    state = SignatureState(spark, str(tmp_path / "state"))
+    run = lambda docs, epoch: sorted(  # noqa: E731
+        r.doc_id
+        for r in dedupe_increment(spark, _mk_docs(spark, docs), state, CFG, epoch=epoch).collect()
+    )
+    second = [(10, base), (11, new), (12, new)]
+    try:
+        assert run([(1, base)], 0) == [1]
+        first = run(second, 1)
+        tree = _tree_bytes(state.root)
+        assert run(second, 1) == first == [11]
+        assert _tree_bytes(state.root) == tree
+        assert sorted(r.doc_id for r in state.signatures().collect()) == [1, 11]
+        assert run([(20, other)], 5) == [20]
+        with pytest.raises(ValueError, match="not above the newest"):
+            run([(30, other + " x")], 3)
+    finally:
+        release_all()
+
+
+def test_incremental_crash_between_state_writes(spark, tmp_path, monkeypatch):
+    """A batch whose bands write fails after its signatures write lists no
+    epoch: every read of the state is unchanged, and the rerun commits the
+    epoch once."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cpp_near_dedupe_spark.cache import release_all
+    from cpp_near_dedupe_spark.streaming.incremental import (
+        SignatureState,
+        dedupe_increment,
+    )
+
+    base = " ".join(f"w{i % 101}" for i in range(400))
+    new = " ".join(f"z{i % 83}" for i in range(400))
+    state = SignatureState(spark, str(tmp_path / "state"))
+    ids = lambda df: sorted(r.doc_id for r in df.select("doc_id").distinct().collect())  # noqa: E731
+    real = DataFrameWriter.parquet
+
+    def bands_write_fails(self, path, *args, **kwargs):
+        if "bands" in os.path.relpath(path, state.root).split(os.sep):
+            raise RuntimeError("injected")
+        return real(self, path, *args, **kwargs)
+
+    second = [(10, base), (11, new)]
+    try:
+        dedupe_increment(spark, _mk_docs(spark, [(1, base)]), state, CFG)
+        monkeypatch.setattr(DataFrameWriter, "parquet", bands_write_fails)
+        with pytest.raises(RuntimeError, match="injected"):
+            dedupe_increment(spark, _mk_docs(spark, second), state, CFG)
+        monkeypatch.undo()
+        assert ids(state.signatures()) == ids(state.bands()) == [1]
+        assert state.committed(1) is None
+        kept = dedupe_increment(spark, _mk_docs(spark, second), state, CFG)
+        assert ids(kept) == [11]
+        assert sorted(r.doc_id for r in state.signatures().collect()) == [1, 11]
+        assert ids(state.bands()) == [1, 11]
+        assert ids(state.committed(1)) == [11]
+    finally:
+        release_all()
+
+
+def test_stream_dedupe_replay_is_a_noop(spark, tmp_path):
+    """A micro-batch the query re-runs (its commit file lost, as after a
+    crash between the sink write and the commit) rewrites the same output
+    rows and leaves the state tree byte-for-byte unchanged."""
+    import os
+
+    from cpp_near_dedupe_spark.streaming.incremental import stream_dedupe
+
+    base = " ".join(f"w{i % 101}" for i in range(400))
+    new = " ".join(f"z{i % 83}" for i in range(400))
+    src, out, state_dir, ckpt = (str(tmp_path / n) for n in ("src", "out", "state", "ckpt"))
+    for rows in ([(1, base), (2, base), (3, "short doc here only")], [(10, base), (11, new)]):
+        _mk_docs(spark, rows).coalesce(1).write.mode("append").parquet(src)
+
+    def run():
+        source = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
-        dedupe_increment(spark, docs, state, cfg)
-    before_sigs = state.signatures().toPandas().sort_values("doc_id")
-    n_files_before = len(
-        [f for f in os.listdir(state.sig_path) if f.endswith(".parquet")]
-    )
-    state.compact(target_partitions=2)
-    after_sigs = state.signatures().toPandas().sort_values("doc_id")
-    n_files_after = len(
-        [f for f in os.listdir(state.sig_path) if f.endswith(".parquet")]
-    )
-    assert n_files_after <= 2 < n_files_before
-    assert list(before_sigs.doc_id) == list(after_sigs.doc_id)
-    # state still serves new batches after the swap
-    more = spark.createDataFrame([(100, texts[0])], "doc_id long, text string")
-    kept = dedupe_increment(spark, more, state, cfg)
-    assert kept.count() == 0  # exact dupe of doc 0 -> dropped against state
+        q = stream_dedupe(spark, source, state_dir, out, CFG, checkpoint_dir=ckpt)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+        rows = spark.read.parquet(out).select("doc_id", "text").collect()
+        return sorted(rows), _tree_bytes(state_dir)
+
+    rows, tree = run()
+    # the file source orders the two files by modification time
+    assert {r.doc_id for r in rows} in ({1, 3, 11}, {3, 10, 11})
+    commits = os.path.join(ckpt, "commits")
+    assert sorted(n for n in os.listdir(commits) if n.isdigit()) == ["0", "1"]
+    for name in ("1", ".1.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    assert run() == (rows, tree)
+    assert os.path.exists(os.path.join(commits, "1"))  # the batch did re-run
 
 
 def test_simhash_batch_global_equals_perdoc():

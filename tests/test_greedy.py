@@ -119,41 +119,63 @@ def test_incremental_drops_only_vs_retained(spark, tmp_path):
     assert {r.doc_id for r in kept2.collect()} == {11}
 
 
-def test_compact_crash_recovery(spark, tmp_path):
-    """A crash between compact's two renames (live dir missing, _old
-    present) must be recovered on the next use; stale _compacting dirs
-    must not break the next compact (ADVICE r2)."""
+def test_compact_crash_recovery(spark, tmp_path, monkeypatch):
+    """A compact that crashes mid-rewrite lists nothing new: the manifest
+    and every read are unchanged. Dirs a crashed append or compact left
+    behind are never read, and the next compact deletes them."""
     import os
     import shutil
 
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cpp_near_dedupe_spark.cache import release_all
     from cpp_near_dedupe_spark.streaming.incremental import (
         SignatureState,
         dedupe_increment,
     )
 
-    text = " ".join(f"w{i % 97}" for i in range(300))
+    texts = [" ".join(f"w{i}x{j % 97}" for j in range(300)) for i in range(3)]
     state = SignatureState(spark, str(tmp_path / "state"))
-    b1 = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    dedupe_increment(spark, b1, state, CFG)
-    before = state.signatures().toPandas().sort_values("doc_id")
+    manifest = os.path.join(state.root, "manifest.json")
+    ids = lambda df: sorted(r.doc_id for r in df.collect())  # noqa: E731
+    real = DataFrameWriter.parquet
 
-    # simulate the crash window: live dir renamed away, _old left behind
-    os.rename(state.sig_path, state.sig_path + "_old")
-    assert state.exists()  # recovery happens on access
-    after = state.signatures().toPandas().sort_values("doc_id")
-    assert list(before.doc_id) == list(after.doc_id)
-    assert not os.path.exists(state.sig_path + "_old")
+    def bands_write_fails(self, path, *args, **kwargs):
+        if "bands" in os.path.relpath(path, state.root).split(os.sep):
+            raise RuntimeError("injected")
+        return real(self, path, *args, **kwargs)
 
-    # stale _compacting junk from a crashed rewrite must be cleared
-    os.makedirs(state.sig_path + "_compacting/junk")
-    state.compact(target_partitions=1)
-    assert not os.path.exists(state.sig_path + "_compacting")
-    assert list(state.signatures().toPandas().sort_values("doc_id").doc_id) == [1]
+    try:
+        for i, text in enumerate(texts):
+            b = spark.createDataFrame([(i, text)], "doc_id long, text string")
+            dedupe_increment(spark, b, state, CFG)
+        listed = open(manifest).read()
 
-    # the recovered+compacted state still serves batches
-    b2 = spark.createDataFrame([(2, text)], "doc_id long, text string")
-    kept = dedupe_increment(spark, b2, state, CFG)
-    assert kept.count() == 0
+        # crash inside the rewrite: the signatures base is written, unlisted
+        monkeypatch.setattr(DataFrameWriter, "parquet", bands_write_fails)
+        with pytest.raises(RuntimeError, match="injected"):
+            state.compact(target_partitions=1)
+        monkeypatch.undo()
+        assert open(manifest).read() == listed
+        assert os.path.exists(os.path.join(state.sig_path, "base=1"))
+        assert ids(state.signatures()) == ids(state.bands().select("doc_id").distinct()) == [0, 1, 2]
+
+        # a crashed append's half-written epoch dir is not read either
+        shutil.copytree(
+            os.path.join(state.sig_path, "epoch=2"), os.path.join(state.sig_path, "epoch=7")
+        )
+        assert ids(state.signatures()) == [0, 1, 2]
+
+        state.compact(target_partitions=1)
+        assert sorted(os.listdir(state.sig_path)) == ["base=1", "epoch=2"]
+        assert sorted(os.listdir(state.bands_path)) == ["base=1", "epoch=2"]
+        assert ids(state.signatures()) == [0, 1, 2]
+
+        # the compacted state still serves batches
+        b = spark.createDataFrame([(9, texts[0])], "doc_id long, text string")
+        assert dedupe_increment(spark, b, state, CFG).count() == 0
+    finally:
+        release_all()
 
 
 def test_chained_corpus_pins_greedy_vs_cc_divergence(spark):
@@ -341,10 +363,13 @@ def test_component_cap_counts_edges_not_nodes(spark, monkeypatch):
 
 
 def test_compact_lock_single_writer(spark, tmp_path):
-    """r4 (VERDICT #7): compaction is single-writer — a concurrent compact
-    raises instead of racing the renames; a crashed holder's stale lock is
-    broken after the timeout; an interrupted compact still recovers."""
+    """append and compact are single-writer: while another writer holds
+    the lock both raise instead of racing. A holder that dies releases the
+    lock with it (the kernel drops its flock), so no stale lock blocks the
+    next writer, and the state it left is intact."""
     import os
+    import subprocess
+    import sys
 
     import pandas as pd
     import pytest as _pytest
@@ -360,24 +385,39 @@ def test_compact_lock_single_writer(spark, tmp_path):
     )
     state.append(sigs, bands)
 
-    # holder alive: second compact refuses
-    state._acquire_lock()
-    with _pytest.raises(RuntimeError, match="single-writer"):
-        state.compact()
-    state._release_lock()
+    # holder alive in this process: a second writer refuses
+    with state._writer():
+        with _pytest.raises(RuntimeError, match="one writer at a time"):
+            state.compact()
+        with _pytest.raises(RuntimeError, match="one writer at a time"):
+            state.append(sigs, bands)
 
-    # stale lock (holder long dead): broken and compaction proceeds
-    state._acquire_lock()
-    old = os.path.getmtime(state._lock_path)
-    os.utime(state._lock_path, (old - 7200, old - 7200))
-    state.compact()  # breaks the stale lock, runs, releases
-    assert not os.path.exists(state._lock_path)
+    # holder in another process, killed while it holds the lock
+    hold = (
+        "import fcntl, sys, time\n"
+        "f = open(sys.argv[1], 'a')\n"
+        "fcntl.flock(f, fcntl.LOCK_EX)\n"
+        "print('held', flush=True)\n"
+        "time.sleep(120)\n"
+    )
+    holder = subprocess.Popen(
+        [sys.executable, "-c", hold, os.path.join(state.root, "_lock")],
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "held"
+        with _pytest.raises(RuntimeError, match="one writer at a time"):
+            state.compact()
+    finally:
+        holder.kill()
+        holder.wait(timeout=30)
+        holder.stdout.close()
+    assert holder.returncode is not None
 
-    # crash mid-swap (live dir renamed away, _old left) with a leftover
-    # lock: the next compact breaks the stale lock and _recover restores
-    os.rename(state.sig_path, state.sig_path + "_old")
-    state._acquire_lock()
-    os.utime(state._lock_path, (old - 7200, old - 7200))
+    state.append(sigs, bands)
+    state.append(sigs, bands)
     state.compact()
-    assert state.signatures().count() == 20
-    assert state.bands().count() == 20
+    assert sorted(os.listdir(state.sig_path)) == ["base=1", "epoch=2"]
+    assert state.signatures().count() == 60
+    assert state.bands().count() == 60
