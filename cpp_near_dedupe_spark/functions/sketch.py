@@ -28,10 +28,10 @@ Two implementations:
 
 * ``sketch_oracle`` — pure Python, structured exactly like the contract
   above; the test oracle.
-* ``sketch_batch`` — numpy-vectorized over a batch of documents: per doc,
-  token runs are found with one boolean-diff pass; all shingle windows in
-  the batch are then hashed together, grouped by byte length, with the
-  vectorized XXH64. This is the kernel the Spark Arrow UDF calls.
+* ``sketch_batch`` — numpy-vectorized over blocks of about 1M code units:
+  per block, one mask pass finds the word runs of all its documents, and
+  all its shingle windows are hashed together, grouped by byte length,
+  with the vectorized XXH64. This is the kernel the Spark Arrow UDF calls.
 """
 
 from __future__ import annotations
@@ -41,12 +41,14 @@ import struct
 import numpy as np
 
 from .alphanum import ALPHANUM
-from .xxh64 import xxh64, xxh64_rows
+from .fnv32 import fnv32_shingle, fnv32_u16_rows
+from .xxh64 import _SCRATCH, xxh64, xxh64_rows
 
 DEFAULT_K = 5  # shingle width in words (`/root/reference/CPPDeduper/CPPDeduper.cpp:20`)
 DEFAULT_NUM_HASHES = 256  # bottom-N sketch size (`CPPDeduper.cpp:341`)
 DEFAULT_SEED = 0  # XXH64 seed (`/root/reference/CPPDeduper/Hashing.h:41`)
 HASH_CHUNK_WINDOWS = 1 << 14  # windows per vectorized hash call (L2-sized)
+BLOCK_CODE_UNITS = 1 << 20  # UTF-16 code units per sketch pass (bounds worker memory)
 
 
 # ---------------------------------------------------------------------------
@@ -127,8 +129,6 @@ def sketch_oracle(
     for j in range(len(words) - k + 1):
         units = [c for w in words[j : j + k] for c in w]
         if hash_bits == 32:
-            from .fnv32 import fnv32_shingle
-
             hashes.add(fnv32_shingle(units))
         else:
             payload = b"".join(struct.pack("<H", c) for c in units)
@@ -141,7 +141,6 @@ def sketch_oracle(
 # ---------------------------------------------------------------------------
 
 _EMPTY_U64 = np.empty(0, dtype=np.uint64)
-_EMPTY_U16 = np.empty(0, dtype="<u2")
 
 
 def sketch_batch(
@@ -153,125 +152,88 @@ def sketch_batch(
 ) -> list[np.ndarray]:
     """Sketch a batch of documents; returns one sorted uint64 array per doc.
 
-    Strategy: per document, one vectorized pass finds word runs and
-    "compacts" word code units into a contiguous array, in which every
-    k-word window is a contiguous slice. All windows across the whole batch
-    are then hashed together, grouped by window length (each group is one
-    ``(m, 2L)`` uint8 matrix → one vectorized XXH64 call). Per-doc
-    ``np.unique`` produces the sorted bottom-N distinct sketch.
+    The batch is cut into consecutive blocks of about ``BLOCK_CODE_UNITS``
+    UTF-16 code units (a longer document is a block of its own), each
+    sketched in one vectorized pass by ``_sketch_block``. The working set,
+    and so the grow-only scratch, is bounded by the block, not the batch.
     """
-    # Phase 1: per-doc tokenization (cheap numpy ops), collect windows.
-    doc_tokens: list[np.ndarray] = []  # compacted word code units per doc
-    doc_wstart: list[np.ndarray] = []  # window start offsets into compacted
-    doc_wlen: list[np.ndarray] = []  # window lengths (code units)
-    n_windows = 0
-    for text in texts:
-        if not text:
-            doc_tokens.append(_EMPTY_U16)
-            doc_wstart.append(None)
-            doc_wlen.append(None)
-            continue
-        codes = np.frombuffer(text.encode("utf-16-le", "surrogatepass"), dtype="<u2")
-        mask = ALPHANUM[codes]
-        # word run boundaries via sign changes of the mask
-        m8 = mask.astype(np.int8)
-        d = np.diff(m8)
-        starts = np.flatnonzero(d == 1) + 1
-        ends = np.flatnonzero(d == -1) + 1
-        if mask[0]:
-            starts = np.concatenate(([0], starts))
-        if mask[-1]:
-            ends = np.concatenate((ends, [codes.size]))
-        nw = starts.size
-        if nw < k:
-            doc_tokens.append(_EMPTY_U16)
-            doc_wstart.append(None)
-            doc_wlen.append(None)
-            continue
-        lens = ends - starts
-        cum = np.concatenate(([0], np.cumsum(lens)))
-        wlen = (cum[k:] - cum[: nw - k + 1]).astype(np.int64)
-        wstart = cum[: nw - k + 1].astype(np.int64)
-        doc_tokens.append(codes[mask])
-        doc_wstart.append(wstart)
-        doc_wlen.append(wlen)
-        n_windows += wstart.size
-
-    # Phase 2: hash all windows in the batch, grouped by byte length.
-    # Build global arrays: for window g -> (doc offset into concat tokens).
-    if n_windows == 0:
-        return [_EMPTY_U64 for _ in doc_tokens]
-
-    from .xxh64 import _SCRATCH
-
-    tok_offsets = np.zeros(len(doc_tokens) + 1, dtype=np.int64)
-    np.cumsum([t.size for t in doc_tokens], out=tok_offsets[1:])
-    n_tok = int(tok_offsets[-1])
-    all_tokens = _SCRATCH.get("sk_all_tok", max(n_tok, 1), np.uint16)[:n_tok]
-    for di, t in enumerate(doc_tokens):
-        if t.size:
-            all_tokens[tok_offsets[di] : tok_offsets[di + 1]] = t
-
-    g_start = _SCRATCH.get("sk_gstart", n_windows, np.int64)
-    g_len = _SCRATCH.get("sk_glen", n_windows, np.int64)
-    g_doc = _SCRATCH.get("sk_gdoc", n_windows, np.int64)
-    pos = 0
-    for di, (ws, wl) in enumerate(zip(doc_wstart, doc_wlen)):
-        if ws is None:
-            continue
-        cnt = ws.size
-        g_start[pos : pos + cnt] = ws + tok_offsets[di]
-        g_len[pos : pos + cnt] = wl
-        g_doc[pos : pos + cnt] = di
-        pos += cnt
-
-    g_hash = _SCRATCH.get("sk_ghash", n_windows, np.uint64)
-    order = np.argsort(g_len, kind="stable")
-    sorted_len = g_len[order]
-    # group boundaries over the sorted length array
-    bounds = np.flatnonzero(np.diff(sorted_len)) + 1
-    group_slices = np.split(order, bounds)
-    # gather windows into reused scratch (fresh allocations fault-storm on
-    # ballooned VMs — see functions/xxh64.py _Scratch). Chunk size 16384
-    # keeps the per-call working set L2-resident: measured 4× faster than
-    # 128k chunks when 8 workers share the memory bus. (A sliding-window
-    # strided view + np.take(axis=0) was tried instead of the index matrix
-    # and is ~200× slower — numpy row-take on overlapping strided views is
-    # pathological.)
-    from .xxh64 import _SCRATCH
-
-    max_chunk = HASH_CHUNK_WINDOWS
-    for idx in group_slices:
-        L = int(g_len[idx[0]])
-        for off in range(0, idx.size, max_chunk):
-            sub = idx[off : off + max_chunk]
-            mm = sub.size
-            idxbuf = _SCRATCH.get("sk_idx", mm * L, np.int64)[: mm * L].reshape(mm, L)
-            np.add(g_start[sub][:, None], np.arange(L)[None, :], out=idxbuf)
-            tokbuf = _SCRATCH.get("sk_tok", mm * L, np.uint16)[: mm * L].reshape(mm, L)
-            np.take(all_tokens, idxbuf, out=tokbuf)
-            if hash_bits == 32:
-                from .fnv32 import fnv32_u16_rows
-
-                g_hash[sub] = fnv32_u16_rows(tokbuf).astype(np.uint64)
-            else:
-                g_hash[sub] = xxh64_rows(
-                    tokbuf.view(np.uint8).reshape(mm, 2 * L), seed
-                )
-
-    # Phase 3: per-doc distinct + bottom-N (np.unique sorts ascending).
     out: list[np.ndarray] = []
-    doc_order = np.argsort(g_doc, kind="stable")
-    doc_bounds = np.flatnonzero(np.diff(g_doc[doc_order])) + 1
-    per_doc = iter(zip(
-        np.split(g_hash[doc_order], doc_bounds),
-        np.split(g_doc[doc_order], doc_bounds),
-    ))
-    nxt = next(per_doc, None)
-    for di in range(len(doc_tokens)):
-        if nxt is not None and nxt[1][0] == di:
-            out.append(np.unique(nxt[0])[:num_hashes])
-            nxt = next(per_doc, None)
-        else:
-            out.append(_EMPTY_U64)
+    block: list[bytes] = []
+    size = 0
+    for text in texts:
+        buf = text.encode("utf-16-le", "surrogatepass") if text else b""
+        if block and size + len(buf) // 2 > BLOCK_CODE_UNITS:
+            out += _sketch_block(block, k, num_hashes, seed, hash_bits)
+            block, size = [], 0
+        block.append(buf)
+        size += len(buf) // 2 + 1
+    if block:
+        out += _sketch_block(block, k, num_hashes, seed, hash_bits)
+    return out
+
+
+def _sketch_block(
+    bufs: list[bytes], k: int, num_hashes: int, seed: int, hash_bits: int
+) -> list[np.ndarray]:
+    """One pass over a block of UTF-16LE documents.
+
+    The documents are joined with a 0 code unit (never alphanumeric) before
+    each and after the last, so one mask pass finds every word run and no
+    word spans two documents. Word code units are compacted into one array
+    in which every k-word window is a contiguous slice; a window counts when
+    its first and last words belong to the same document. All windows are
+    hashed together, grouped by length (each group is one ``(m, 2L)`` uint8
+    matrix → one vectorized XXH64 call). Word, and so window, document ids
+    are nondecreasing, so each document's windows are one slice, whose
+    ``np.unique`` is its sorted bottom-N distinct sketch.
+    """
+    out = [_EMPTY_U64] * len(bufs)
+    codes = np.frombuffer(b"\0\0".join([b"", *bufs, b""]), dtype="<u2")
+    sizes = np.fromiter((len(b) // 2 + 1 for b in bufs), np.int64, len(bufs))
+    doc_start = np.cumsum(sizes) - sizes + 1
+    mask = ALPHANUM[codes]
+    # the stream starts and ends on a delimiter, so mask edges alternate
+    # word start, word end
+    edges = np.flatnonzero(mask[1:] != mask[:-1]) + 1
+    starts, ends = edges[0::2], edges[1::2]
+    nw = starts.size
+    if nw < k:
+        return out
+    w_doc = np.searchsorted(doc_start, starts, side="right") - 1
+    cum = np.zeros(nw + 1, dtype=np.int64)
+    np.cumsum(ends - starts, out=cum[1:])
+    valid = np.flatnonzero(w_doc[: nw - k + 1] == w_doc[k - 1 :])
+    if valid.size == 0:
+        return out
+    tokens = np.compress(mask, codes, out=_SCRATCH.get("sk_all_tok", int(cum[-1]), np.uint16))
+    g_start = cum[valid]
+    g_len = cum[valid + k] - g_start
+    g_hash = _SCRATCH.get("sk_ghash", valid.size)
+    # gather windows into reused scratch (see functions/xxh64.py _Scratch).
+    # Chunk size 16384 keeps the per-call working set L2-resident: measured
+    # 4× faster than 128k chunks when 8 workers share the memory bus. (A
+    # sliding-window strided view + np.take(axis=0) was tried instead of the
+    # index matrix and is ~200× slower — numpy row-take on overlapping
+    # strided views is pathological.)
+    order = np.argsort(g_len)
+    for idx in np.split(order, np.flatnonzero(np.diff(g_len[order])) + 1):
+        L = int(g_len[idx[0]])
+        for off in range(0, idx.size, HASH_CHUNK_WINDOWS):
+            sub = idx[off : off + HASH_CHUNK_WINDOWS]
+            mm = sub.size
+            idxbuf = _SCRATCH.get("sk_idx", mm * L, np.int64).reshape(mm, L)
+            np.add(g_start[sub][:, None], np.arange(L)[None, :], out=idxbuf)
+            tokbuf = _SCRATCH.get("sk_tok", mm * L, np.uint16).reshape(mm, L)
+            np.take(tokens, idxbuf, out=tokbuf)
+            if hash_bits == 32:
+                g_hash[sub] = fnv32_u16_rows(tokbuf)
+            else:
+                g_hash[sub] = xxh64_rows(tokbuf.view(np.uint8).reshape(mm, 2 * L), seed)
+
+    counts = np.bincount(w_doc[valid], minlength=len(bufs))
+    stop = np.cumsum(counts)
+    for di in np.flatnonzero(counts):
+        u = np.unique(g_hash[stop[di] - counts[di] : stop[di]])
+        # a slice view would keep all of the doc's distinct hashes alive
+        out[di] = u[:num_hashes].copy() if u.size > num_hashes else u
     return out

@@ -34,6 +34,7 @@ def test_sketch_32bit_oracle_vs_batch():
     texts = ["", None, "one two three four five"]
     texts += [" ".join(rng.choices(vocab, k=rng.randrange(0, 200))) for _ in range(20)]
     outs = sketch_batch(texts, hash_bits=32)
+    assert len(outs) == len(texts)
     for t, got in zip(texts, outs):
         exp = sketch_oracle(t, hash_bits=32)
         assert list(map(int, got)) == exp

@@ -26,6 +26,8 @@ from cpp_near_dedupe_spark.functions import (
     xxh64,
     xxh64_rows,
 )
+from cpp_near_dedupe_spark.functions import sketch as sketch_mod
+from cpp_near_dedupe_spark.functions.xxh64 import _SCRATCH
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden")
 
@@ -123,8 +125,44 @@ def test_sketch_batch_matches_oracle():
     vocab = ["alpha", "beta", "gamma", "δelta", "eps", "ζeta", "数", "слово"]
     cases = ["", None, "one two three four five", "💩 a b c d e f"]
     cases += [" ".join(rng.choices(vocab, k=rng.randrange(0, 300))) for _ in range(40)]
-    for got, text in zip(sketch_batch(cases), cases):
+    outs = sketch_batch(cases)
+    assert len(outs) == len(cases)
+    for got, text in zip(outs, cases):
         assert list(map(int, got)) == sketch_oracle(text)
+
+
+@pytest.mark.parametrize("hash_bits", [64, 32])
+def test_sketch_batch_block_edges_match_oracle(monkeypatch, hash_bits):
+    # at every bound from 8 to 68 code units, the degenerate documents
+    # land on a different block edge; `big` is larger than any whole block
+    big = " ".join(f"w{i}" for i in range(40))
+    cases = [None, "one two three four five", "", "a b c", "💩 a b c d e 💩 f 💩",
+             big, "𝒳𝒴 one two 𝒵 three four five six", None, "💩", big, "", "p q r s t u"]
+    expected = [sketch_oracle(t, hash_bits=hash_bits) for t in cases]
+    for bound in range(8, 72, 4):
+        monkeypatch.setattr(sketch_mod, "BLOCK_CODE_UNITS", bound)
+        assert len(big) > bound
+        got = sketch_batch(cases, hash_bits=hash_bits)
+        assert [list(map(int, g)) for g in got] == expected, bound
+
+
+def test_sketch_scratch_is_bounded_by_the_block(monkeypatch):
+    """After many blocks, every ``sk_*`` scratch buffer is sized for one.
+
+    A block of C code units holds at most C word code units and C windows,
+    and each code unit lies in at most k windows, so no per-block array
+    exceeds k*C elements; grow-by-doubling allows 2× that, and ``_Scratch``
+    never allocates below 1 << 14.
+    """
+    bound = 1 << 12
+    monkeypatch.setattr(sketch_mod, "BLOCK_CODE_UNITS", bound)
+    monkeypatch.setattr(_SCRATCH, "_bufs", {})
+    rng = random.Random(11)
+    texts = [" ".join(f"w{rng.randrange(5000)}" for _ in range(700)) for _ in range(64)]
+    assert all(len(t) < bound for t in texts) and sum(map(len, texts)) > 4 * bound
+    sketch_batch(texts)
+    sizes = {n: b.size for n, b in _SCRATCH._bufs.items() if n.startswith("sk_")}
+    assert sizes and max(sizes.values()) <= max(1 << 14, 2 * sketch_mod.DEFAULT_K * bound), sizes
 
 
 def test_sketch_order_sensitivity():

@@ -1,6 +1,7 @@
 """Hypothesis property tests for the kernels (no Spark)."""
 
 import string
+from unittest import mock
 
 import numpy as np
 import pytest
@@ -15,6 +16,7 @@ from cpp_near_dedupe_spark.functions import (
     xxh64,
     xxh64_rows,
 )
+from cpp_near_dedupe_spark.functions import sketch as sketch_mod
 
 # text strategy: words over a mixed unicode alphabet joined by delimiters
 _word = st.text(
@@ -27,12 +29,20 @@ _word = st.text(
 _text = st.lists(_word, min_size=0, max_size=60).map(" ".join)
 
 
-@settings(max_examples=60, deadline=None)
-@given(st.lists(_text, min_size=1, max_size=8))
-def test_sketch_batch_always_matches_oracle(texts):
-    outs = sketch_batch(texts)
+@settings(max_examples=120, deadline=None)
+@given(
+    st.lists(_text, min_size=1, max_size=8),
+    st.sampled_from([sketch_mod.BLOCK_CODE_UNITS, 40]),
+    st.sampled_from([64, 32]),
+)
+def test_sketch_batch_always_matches_oracle(texts, block, hash_bits):
+    # at 40 code units per block most documents straddle a block edge or
+    # fill a block of their own
+    with mock.patch.object(sketch_mod, "BLOCK_CODE_UNITS", block):
+        outs = sketch_batch(texts, hash_bits=hash_bits)
+    assert len(outs) == len(texts)
     for t, got in zip(texts, outs):
-        assert list(map(int, got)) == sketch_oracle(t)
+        assert list(map(int, got)) == sketch_oracle(t, hash_bits=hash_bits)
 
 
 @settings(max_examples=60, deadline=None)
