@@ -1339,8 +1339,9 @@ def _q_lsh_dedupe_32bit(spark, sf_dir):
 def _q_lsh_greedy_kept(spark, sf_dir):
     """Strict arrival-order greedy mode (operators/greedy.py): the
     reference's exact per-doc keep/drop semantics — drop iff ≥ threshold
-    vs an already-RETAINED earlier doc (`ComparerThread.h:271-414`) — as a
-    distributed fixed-point over the pipeline's verified edges. This row is
+    vs an already-RETAINED earlier doc (`ComparerThread.h:271-414`) — over
+    the pipeline's verified edges, decided in one task (frontier rounds
+    only above the 1M-edge cap). This row is
     rows-only because the XXH64 parity edges feeding it are not
     SQL-expressible; the greedy RESOLVE itself is hash-verified through
     ``lsh_sql_greedy_kept`` (recursive-CTE oracle over the md5 chain) and

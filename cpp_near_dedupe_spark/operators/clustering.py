@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 # max edges the one finishing task holds: u/v plus the union-find arrays
 # are ~100 MB of numpy at 1M edges. Greedy resolution uses the same bound
-# for its per-component tasks.
+# for its one task over the whole edge set (operators/greedy.py).
 _LOCAL_EDGE_CAP = 1_000_000
 
 

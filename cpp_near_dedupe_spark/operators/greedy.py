@@ -1,5 +1,5 @@
 """Strict arrival-order greedy resolution — the reference's exact keep/drop
-semantics, distributed by duplicate-graph component.
+semantics.
 
 The reference processes documents in arrival order and drops a doc iff it
 scores ≥ threshold against an already-RETAINED earlier doc
@@ -10,34 +10,31 @@ A~C edge, CC keeps only A (one cluster), greedy keeps A and C (B dropped
 against A; C's only match B is not retained).
 
 The greedy retained set is the lexicographically-first maximal independent
-set of the duplicate graph — inherently sequential in general, BUT the
-decision of a doc depends only on docs inside its own weakly-connected
-component, so components are embarrassingly parallel. Two engines:
+set of the duplicate graph — inherently sequential, but a doc's decision
+depends only on its earlier neighbours' decisions, so one ascending pass
+over every edge equals any split of the graph into separately-resolved
+parts. One rule, decided by the edge count, as in
+``clustering.connected_components``:
 
-* **per-component** (every component under the cap): connected
-  components over the edge list (operators/clustering.py — one task for
-  graphs under its edge cap), then one ``applyInPandas`` per component
-  running the reference's literal sequential per-doc loop in memory. One
-  Spark job decides EVERY component regardless of its chain depth — a
-  500-link decision chain that costs 500 rounds under the frontier engine
-  is a single in-task loop here. Components with more EDGES than
-  clustering's ``_LOCAL_EDGE_CAP`` (the same one-task bound) fall back to
-  the frontier engine (the edge list is what the task materializes, so it
-  would not fit); real dupe families are stars/cliques orders of
-  magnitude below the cap.
+* **at or below** clustering's ``_LOCAL_EDGE_CAP`` the whole graph is
+  decided in ONE ``coalesce(1).mapInPandas`` task running the reference's
+  literal sequential loop (``greedy_decide_py``) — the in-task style of
+  "Accelerating Python UDFs in Vectorized Query Execution" (CIDR 2022).
+  A 500-link decision chain is one in-task loop, whatever its depth; the
+  dedupe graphs this engine sees sit orders of magnitude under the cap.
 
-* **frontier** (fallback + cross-check): parallel rounds — each round
+* **above** the cap, the frontier engine: parallel rounds — each round
   decides every doc whose earlier neighbors are all decided. Round count
   = length of the longest decision chain (`LAST_FRONTIER_ROUNDS` records
   it); per round everything is hash joins, lazily localCheckpoint-ed,
-  one Spark job per round. Kept for over-cap components and as an
-  independent implementation the tests cross-verify against (plus the
-  driver's recursive-CTE DuckDB oracle, ``lsh_sql_greedy_kept``).
+  one Spark job per round. It is also the independent implementation the
+  tests cross-verify against (plus the driver's recursive-CTE DuckDB
+  oracle, ``lsh_sql_greedy_kept``).
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -62,30 +59,38 @@ def greedy_resolve(
     ``cfg.id_col``, the reference's (file_index, row_number) packed id).
 
     ``edges`` is undirected input; it is canonicalized to (earlier, later)
-    here. Docs without any edge never enter either engine (kept by
-    definition, unioned in at the end) — the working set is only the
-    duplicate mass, a small fraction of the corpus at any scale.
-
-    Components over the edge cap go through the frontier engine, bounded
-    by ``max_rounds`` (the cap is measured in EDGES, because the edge list
-    is what the per-component task materializes — a dense small-node
-    component is routed to the frontier engine too).
+    here, self-loops dropped, then checkpointed and counted in one Spark
+    job — the only job this call starts when the count is at or below
+    clustering's ``_LOCAL_EDGE_CAP`` (read at call time). Then one task
+    decides every doc; above the cap the frontier engine takes the whole
+    graph, bounded by ``max_rounds``: a decision chain deeper than that
+    raises "did not converge", also when it lies in a small component of
+    the over-cap graph. Docs without any edge are kept by definition.
 
     Edges are not deduplicated: a repeated edge cannot change any
     keep/drop decision (the drop rule is an existence test), and the
     pipeline's pair generators end in dropDuplicates anyway.
     """
+    from . import clustering
+
     id_col = cfg.id_col
-    e = edges.select(
-        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-    ).filter(F.col("a") != F.col("b"))
-    dropped = _component_dropped(e.localCheckpoint(eager=False), max_rounds)
-    return docs.select(F.col(id_col)).join(
-        dropped.withColumnRenamed("id", id_col), id_col, "left_anti"
-    ).select(id_col, F.lit(True).alias("is_kept")).unionByName(
-        dropped.select(
-            F.col("id").alias(id_col), F.lit(False).alias("is_kept")
-        )
+    e = (
+        edges.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .localCheckpoint(eager=False)
+    )
+    # an RDD count is one job; DataFrame.count() under AQE submits its
+    # shuffle map stage as a job of its own
+    if e._jdf.queryExecution().toRdd().count() <= clustering._LOCAL_EDGE_CAP:
+        t = e.schema["a"].dataType.simpleString()  # ids may be long or string
+        dropped = e.coalesce(1).mapInPandas(_local_dropped, f"id {t}")
+    else:
+        dropped = _frontier_dropped(e, max_rounds)
+    # one left join reads the decisions once (the frontier returns None
+    # only for an empty edge set, which never gets here)
+    flagged = dropped.select(F.col("id").alias(id_col), F.lit(True).alias("dropped"))
+    return docs.select(id_col).join(flagged, id_col, "left").select(
+        id_col, F.col("dropped").isNull().alias("is_kept")
     )
 
 
@@ -94,7 +99,8 @@ def greedy_decide_py(
 ) -> dict[int, bool]:
     """The reference's literal sequential loop (`ComparerThread.h:271-414`):
     process ids ascending; drop iff an EARLIER RETAINED neighbor exists.
-    Shared by the per-component engine and the test oracle."""
+    Run by the one-task engine over the whole edge set, and the tests'
+    oracle."""
     adj: dict[int, list[int]] = {}
     for a, b in pairs:
         lo, hi = (a, b) if a < b else (b, a)
@@ -110,77 +116,15 @@ def greedy_decide_py(
     return decision
 
 
-def _component_dropped(e: DataFrame, max_rounds: int) -> DataFrame:
-    """Dropped ids via per-component sequential resolution; components over
-    ``_LOCAL_EDGE_CAP`` EDGES go through the frontier engine instead."""
-    from .clustering import _LOCAL_EDGE_CAP, connected_components
-
-    comp = connected_components(e, distinct_pairs=True)
-    # registry-persisted (r6): tagged is consumed by the big-component
-    # probe's collect() job AND the per-component resolve in the final
-    # plan — unpersisted, the second consumer re-ran the CC-finalize
-    # aggregation (members ∪ roots) and the edge join. One row per edge,
-    # i.e. O(duplicate mass), same lifecycle as the other tracked
-    # persists (cache.py contract: the materializing caller releases).
-    # Interleaved A/B at sf0.1: 49 vs 54-55 Spark jobs, minima 6.71 vs
-    # 7.98 s on lsh_greedy_kept.
-    from ..cache import track
-
-    tagged = track(
-        e.join(
-            comp.select(F.col("id").alias("a"), F.col("cluster_id").alias("comp")),
-            "a",
-        )
-    )
-    # cap on EDGES per component, not nodes: the applyInPandas task below
-    # materializes the component's edge list, and under dense edge sets
-    # (brute-force edges at a low threshold) a component far under a node
-    # cap can carry O(nodes²) edges. ``tagged`` is one row per edge, so
-    # this aggregate measures exactly the quantity the task will hold;
-    # edges ≥ nodes−1 in any connected component, so the edge cap also
-    # bounds the node count.
-    sizes = tagged.groupBy("comp").agg(F.count("*").alias("n"))
-    big = sizes.filter(F.col("n") > _LOCAL_EDGE_CAP).select("comp")
-    # the big list is empty in practice (a >cap-member duplicate FAMILY
-    # means the corpus is degenerate) and BOUNDED by construction (at most
-    # total_edges / _LOCAL_EDGE_CAP ids), so collect it once: the common
-    # empty case then skips the routing anti-join entirely instead of
-    # re-running the size aggregation in both the probe job and the final
-    # job (r6 — the probe was a limit(1).count() whose work the decision
-    # branches then repeated).
-    # Plan hazard if the cap is ever lowered: ``isin(big_ids)``
-    # inlines every id as a literal into the plan, so thousands of big
-    # components would bloat analysis and codegen — switch to a broadcast
-    # left_anti / left_semi join on ``big`` before shrinking the cap.
-    big_ids = [r["comp"] for r in big.collect()]
-    small = (
-        tagged
-        if not big_ids
-        else tagged.filter(~F.col("comp").isin(big_ids))
-    )
-
-    def resolve(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_ids, out_kept = [], []
-        # a partition may carry multiple (small) components
-        for _, g in pdf.groupby("comp", sort=False):
-            pairs = zip(g["a"].tolist(), g["b"].tolist())
-            ids = set(g["a"].tolist()) | set(g["b"].tolist())
-            for i, k in greedy_decide_py(pairs, ids).items():
-                out_ids.append(i)
-                out_kept.append(k)
-        return pd.DataFrame({"id": out_ids, "is_kept": out_kept})
-
-    decided = small.groupBy("comp").applyInPandas(resolve, "id long, is_kept boolean")
-    dropped = decided.filter(~F.col("is_kept")).select("id")
-
-    if big_ids:
-        big_edges = tagged.filter(F.col("comp").isin(big_ids)).select("a", "b")
-        big_dropped = _frontier_dropped(
-            big_edges.localCheckpoint(eager=False), max_rounds
-        )
-        if big_dropped is not None:
-            dropped = dropped.unionByName(big_dropped)
-    return dropped
+def _local_dropped(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body over ONE partition: the whole (a, b) edge set →
+    the dropped ids. An empty edge set arrives as no batches at all."""
+    parts = list(batches)
+    if parts:
+        e = pd.concat(parts)
+        a, b = e["a"].tolist(), e["b"].tolist()
+        decision = greedy_decide_py(zip(a, b), a + b)
+        yield pd.DataFrame({"id": [i for i, k in decision.items() if not k]})
 
 
 def _frontier_dropped(e: DataFrame, max_rounds: int) -> DataFrame | None:

@@ -254,27 +254,7 @@ def _chain_star_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
 
     id_col = cfg.id_col
     cap = cfg.hot_band_cap
-    # Statistical hot detection: an exact bucket_stats pass is a full
-    # hash aggregation over the hottest table in the pipeline, and it
-    # exists only to find buckets worth salting — a ROUTING decision,
-    # not a semantic one (salting any bucket is always correct;
-    # leaving a mildly-over-cap bucket unsalted costs one window task
-    # of that size, which is harmless). A 2% sample finds every bucket
-    # that actually matters: a 10⁴-row bucket shows ~200 sampled rows
-    # (P[miss] ≈ 0), a 10⁷-row one ~2·10⁵; only buckets within a few ×
-    # of the cap are detected noisily, and those are exactly the ones
-    # that don't need salting. ~50× less aggregation input than the
-    # exact pass. The sample is a VALUE filter, not `DataFrame.sample`
-    # — partition-layout changes cannot flip a routing decision.
-    sample_mod = 50  # 2%
-    hot_keys = track(
-        bands.filter(
-            F.pmod(F.xxhash64(F.col(id_col), F.col("band_key")), sample_mod) == 0
-        )
-        .groupBy("band_key")
-        .agg((F.count("*") * sample_mod).alias("bucket_size"))
-        .filter(F.col("bucket_size") > cap)
-    )
+    hot = track(hot_keys(bands, cfg))
 
     # ONE broadcast left join routes every row: cold rows (the vast
     # majority) get salt 0, i.e. the plain per-bucket window; over-cap rows
@@ -285,7 +265,7 @@ def _chain_star_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
     n_salts = F.expr(f"div(bucket_size + {cap - 1}, {cap})")
     salted = (
         bands.select("band_key", id_col)
-        .join(F.broadcast(hot_keys), ["band_key"], "left")
+        .join(F.broadcast(hot), ["band_key"], "left")
         .select(
             "band_key",
             id_col,
@@ -313,10 +293,45 @@ def _chain_star_pairs(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
     return pairs.unionByName(links).dropDuplicates(["a", "b"])
 
 
+def hot_keys(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
+    """The over-cap band buckets the pair router routes apart, one row per
+    ``band_key`` with its ``bucket_size``: under ``chain_star`` the 2%
+    sample's over-cap keys that ``_chain_star_pairs`` salts, under
+    ``all_pairs`` the exact hot stats that ``capped_star_pairs``
+    star-routes (the same plan, so the same cache entry). The router
+    persists it through the cache registry; a later count of this plan —
+    the checkpointed ``pairs`` stage's ``hot_buckets`` note — reads that
+    cached relation, not ``bands``.
+
+    Statistical hot detection under ``chain_star``: an exact
+    ``bucket_stats`` pass is a full hash aggregation over the hottest table
+    in the pipeline, and it exists only to find buckets worth salting — a
+    ROUTING decision, not a semantic one (salting any bucket is always
+    correct; leaving a mildly-over-cap bucket unsalted costs one window
+    task of that size, which is harmless). A 2% sample finds every bucket
+    that actually matters: a 10⁴-row bucket shows ~200 sampled rows
+    (P[miss] ≈ 0), a 10⁷-row one ~2·10⁵; only buckets within a few × of
+    the cap are detected noisily, and those are exactly the ones that
+    don't need salting. ~50× less aggregation input than the exact pass.
+    The sample is a VALUE filter, not ``DataFrame.sample`` — partition
+    layout changes cannot flip a routing decision.
+    """
+    if cfg.pair_topology != "chain_star":
+        return hot_bucket_stats(bands, cfg)
+    sample_mod = 50  # 2%
+    return (
+        bands.filter(
+            F.pmod(F.xxhash64(F.col(cfg.id_col), F.col("band_key")), sample_mod) == 0
+        )
+        .groupBy("band_key")
+        .agg((F.count("*") * sample_mod).alias("bucket_size"))
+        .filter(F.col("bucket_size") > cfg.hot_band_cap)
+    )
+
+
 def hot_bucket_stats(bands: DataFrame, cfg: DedupeConfig) -> DataFrame:
-    """Per-bucket sizes above the cap (exact) — the over-cap count a
-    checkpointed run records, so hot-band routing is observable, never
-    silent."""
+    """Per-bucket sizes above the cap (exact): ``all_pairs``' hot keys, and
+    the benchmark trace's over-cap statistics under either topology."""
     return bucket_stats(bands, ["band_key"], cfg.id_col).filter(
         F.col("bucket_size") > cfg.hot_band_cap
     )

@@ -21,8 +21,8 @@ the store abstracts only what we need (write/read/exists). The store only
 stores: a stage body builds the same plan with or without one. Per-file
 row counters come from the footers of the files a stage just wrote and
 land in ``_metrics/<stage>.parquet`` (lineage requirement); the ``pairs``
-manifest entry also records how many band buckets exceed the hot-band cap
-— no silent drops.
+manifest entry also records how many band buckets the pair router found
+over the hot-band cap and routed apart — no silent drops.
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ from ..config import DedupeConfig
 from ..operators.sketch_op import sketch_documents
 from ..operators.blocking import explode_bands
 from ..cache import track
-from ..operators.pairs import candidate_pairs, hot_bucket_stats
+from ..operators.pairs import candidate_pairs, hot_keys
 from ..operators.scoring import score_pairs
 from ..operators.clustering import connected_components
 from ..operators.resolve import resolve_clusters
@@ -161,8 +161,11 @@ class CheckpointStore:
         schema = StructType.fromJson(load_manifest(self._manifest_path)[stage]["schema"])
         return self.spark.read.schema(schema).parquet(self.path(stage))
 
-    def write(self, stage: str, df: DataFrame, fingerprint: str, **notes) -> DataFrame:
-        """Write ``df`` as ``stage``; ``notes`` join its manifest entry."""
+    def write(
+        self, stage: str, df: DataFrame, fingerprint: str, notes: Callable[[], dict] = dict
+    ) -> DataFrame:
+        """Write ``df`` as ``stage``; ``notes()``, called after the write,
+        joins its manifest entry."""
         t0 = time.time()
         m = load_manifest(self._manifest_path)
         if m.pop(stage, None) is not None:
@@ -172,7 +175,7 @@ class CheckpointStore:
         m[stage] = {
             "fingerprint": fingerprint,
             "rows": rows,
-            **notes,
+            **notes(),
             "wall_sec": round(time.time() - t0, 2),
             "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             "schema": df.schema.jsonValue(),
@@ -306,7 +309,7 @@ def run_pipeline(
             return out
         if store.is_complete(name, fp):
             return store.read(name)
-        return store.write(name, make(), fp, **notes())
+        return store.write(name, make(), fp, notes)
 
     id_col = cfg.id_col
     signatures = stage("signatures", lambda: fam.sketch(docs, cfg))
@@ -331,11 +334,12 @@ def run_pipeline(
     if stop_after == "bands":
         return PipelineResult(signatures, bands, None, None, None, None)
 
-    # the over-cap bucket count is lineage only: routing never reads it
+    # the note counts the hot keys the router routed apart: after the
+    # write it reads their cached relation, not bands
     pairs = stage(
         "pairs",
         lambda: candidate_pairs(bands, cfg),
-        notes=lambda: {"hot_buckets": hot_bucket_stats(bands, cfg).count()},
+        notes=lambda: {"hot_buckets": hot_keys(bands, cfg).count()},
     )
     if stop_after == "pairs":
         return PipelineResult(signatures, bands, pairs, None, None, None)

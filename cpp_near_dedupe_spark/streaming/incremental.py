@@ -212,8 +212,8 @@ def dedupe_increment(
     earlier than the whole batch, this factors exactly: (1) docs matching
     state are dropped outright (they can never be retained, so they also
     cannot drop anyone); (2) the remaining docs run the arrival-order
-    greedy fixed-point (operators/greedy.py) over the within-batch edges
-    restricted to them. The two modes genuinely differ: for batch docs
+    greedy resolve (operators/greedy.py: one task under its edge cap)
+    over the within-batch edges restricted to them. The two modes genuinely differ: for batch docs
     X < Y with X~Y, where X matches state but Y does not, the default
     drops both (Y loses to X within-batch, X loses to state) while the
     reference keeps Y (its only match X was never retained) — pinned in

@@ -8,6 +8,7 @@ cached.
 """
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from cpp_near_dedupe_spark.cache import release_all, tracked_count
@@ -116,3 +117,28 @@ def test_hot_stats_cached_once_across_branches(spark):
     pairs.count()
     release_all()
     assert tracked_count() == 0
+
+
+@pytest.mark.parametrize("topology", ["chain_star", "all_pairs"])
+def test_hot_buckets_note_reads_the_routers_hot_keys(spark, topology):
+    """The checkpointed ``pairs`` stage's ``hot_buckets`` note counts the
+    hot keys the pair router actually routed apart: once the pairs ran,
+    the note's plan is the router's cached relation, not a second
+    aggregation over the bands table."""
+    from cpp_near_dedupe_spark.operators.pairs import candidate_pairs, hot_keys
+
+    release_all()
+    cfg = DedupeConfig(id_col="doc_id", hot_band_cap=64, pair_topology=topology)
+    bands = spark.range(2000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 3).alias("band_key")
+    )
+    candidate_pairs(bands, cfg).count()
+    assert tracked_count() == 1
+    note = hot_keys(bands, cfg).groupBy().count()
+    plan = note._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    nodes = [line.lstrip(" +-:").split(" ")[0] for line in plan]
+    assert "InMemoryRelation" in nodes, plan
+    # above the cache only the count's own aggregate and projection
+    assert set(nodes[: nodes.index("InMemoryRelation")]) <= {"Aggregate", "Project"}, plan
+    assert note.first()[0] == 3  # every 667-row bucket is over the cap
+    release_all()

@@ -262,11 +262,10 @@ def _frontier_kept(spark, ids, edges, max_rounds):
 
 
 def test_engines_agree_and_deep_chain_is_one_job(spark, monkeypatch):
-    """r4: the per-component pandas engine must equal the frontier engine
-    on a mixed graph, and a 500-link decision chain — 500 rounds under
-    the frontier — resolves per component without touching max_rounds."""
-    import time
-
+    """r4: the one-task engine decides a 500-link decision chain — 500
+    rounds under the frontier engine — plus a clique and an edgeless doc
+    without touching max_rounds, and the frontier engine agrees with it on
+    the chain's first 40 nodes, in exactly 40 rounds."""
     from cpp_near_dedupe_spark.operators import greedy as G
 
     n = 500
@@ -277,28 +276,72 @@ def test_engines_agree_and_deep_chain_is_one_job(spark, monkeypatch):
     edges = _edges_df(spark, chain + extra)
 
     monkeypatch.setattr(G, "LAST_FRONTIER_ROUNDS", 0)
-    t0 = time.time()
     auto = {
         r.doc_id: r.is_kept
         for r in greedy_resolve(docs, edges, CFG).collect()
     }
-    auto_wall = time.time() - t0
-    assert G.LAST_FRONTIER_ROUNDS == 0  # every component under the cap
+    assert G.LAST_FRONTIER_ROUNDS == 0  # the whole graph is under the cap
     # alternating keep on the chain (greedy MIS from the minimum)
     for i in range(n):
         assert auto[i] == (i % 2 == 0), f"doc {i}"
     assert auto[1000] and not auto[1001] and not auto[1002]
     assert auto[2000]
-    # the frontier engine on the same chain would need n-1 rounds — prove
-    # the claim on a shorter chain and pin the round count
+    # the frontier engine on a shorter chain: rounds == decision-chain
+    # depth in NODES (doc 0 decides in round 1, each successor one round
+    # later -> 40 rounds for a 40-node chain)
     short = [(i, i + 1) for i in range(39)]
     frontier = _frontier_kept(spark, range(40), short, max_rounds=60)
-    # rounds == decision-chain depth in NODES: doc 0 decides in round 1,
-    # each successor one round later -> 40 rounds for a 40-node chain
     assert G.LAST_FRONTIER_ROUNDS == 40
-    assert all(frontier[i] == (i % 2 == 0) for i in range(40))
-    print(f"per-component engine resolved 500-chain in {auto_wall:.1f}s "
-          f"(frontier: 40 rounds for a 40-node chain)")
+    assert frontier == {i: auto[i] for i in range(40)}
+
+
+def test_under_cap_is_one_job_and_one_task(spark):
+    """Under the edge cap, the greedy_resolve call starts exactly one Spark
+    job (the edge checkpoint and its count), and the decision is one
+    mapInPandas task read once — no grouped per-component pandas pass."""
+    from cpp_near_dedupe_spark.cache import tracked_count
+    from cpp_near_dedupe_spark.operators.greedy import greedy_decide_py
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    edges = [(i, i + 1) for i in range(9)] + [(20, 21), (20, 22), (21, 22)]
+    ids = list(range(10)) + [20, 21, 22, 30]
+    docs, edges_df = _ids_df(spark, ids), _edges_df(spark, edges)
+    tracked = tracked_count()
+
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    out = greedy_resolve(docs, edges_df, CFG)
+    bus.waitUntilEmpty()
+    assert len(set(sc.statusTracker().getJobIdsForGroup(None)) - before) == 1
+
+    assert {r.doc_id: r.is_kept for r in out.collect()} == greedy_decide_py(edges, ids)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.split("== Initial Plan ==")[0].count("MapInPandas") == 1
+    assert tracked_count() == tracked  # nothing registered for release
+
+
+@pytest.mark.parametrize("below", [0, 1])
+def test_edge_cap_boundary(spark, monkeypatch, below):
+    """The cap is inclusive: with it at the edge count the one task decides
+    (no frontier round); one below, the frontier takes the whole graph.
+    Both equal the sequential loop."""
+    from cpp_near_dedupe_spark.operators import clustering
+    from cpp_near_dedupe_spark.operators import greedy as G
+
+    edges = [(i, i + 1) for i in range(7)] + [(0, 2), (10, 11), (11, 12)]
+    ids = list(range(8)) + [10, 11, 12, 13]
+    monkeypatch.setattr(clustering, "_LOCAL_EDGE_CAP", len(edges) - below)
+    monkeypatch.setattr(G, "LAST_FRONTIER_ROUNDS", 0)
+    out = {
+        r.doc_id: r.is_kept
+        for r in greedy_resolve(
+            _ids_df(spark, ids), _edges_df(spark, edges), CFG
+        ).collect()
+    }
+    assert (G.LAST_FRONTIER_ROUNDS > 0) == bool(below)
+    assert out == G.greedy_decide_py(edges, ids)
 
 
 def test_frontier_converging_on_last_round_is_success(spark):
@@ -318,9 +361,9 @@ def test_frontier_round_budget_exceeded_raises_cleanly(spark):
 
 
 def _over_cap_greedy(spark, monkeypatch, ids, edges, cap):
-    """greedy_resolve with the per-component edge cap (clustering's
-    ``_LOCAL_EDGE_CAP``) lowered to ``cap``; asserts the over-cap
-    component went through the frontier engine."""
+    """greedy_resolve with the one-task edge cap (clustering's
+    ``_LOCAL_EDGE_CAP``) lowered to ``cap``; asserts the over-cap graph
+    went through the frontier engine."""
     from cpp_near_dedupe_spark.operators import clustering
     from cpp_near_dedupe_spark.operators import greedy as G
 
@@ -337,8 +380,9 @@ def _over_cap_greedy(spark, monkeypatch, ids, edges, cap):
 
 
 def test_auto_falls_back_to_frontier_for_big_components(spark, monkeypatch):
-    """Over-cap components route through the frontier engine; results must
-    still match the python oracle."""
+    """An over-cap graph routes through the frontier engine as a whole
+    (the small chain beside the big star too); results must still match
+    the python oracle."""
     from cpp_near_dedupe_spark.operators.greedy import greedy_decide_py
 
     star = [(0, j) for j in range(1, 30)]          # big (cap=10) star
@@ -349,17 +393,32 @@ def test_auto_falls_back_to_frontier_for_big_components(spark, monkeypatch):
 
 
 def test_component_cap_counts_edges_not_nodes(spark, monkeypatch):
-    """r5 (VERDICT #3): the cap bounds the per-task EDGE list. A clique on
-    8 nodes carries 28 edges — under a node-count reading of cap=20 it
-    would stay on the per-component path, but the task materializes 28
-    edge rows, so it must route to the frontier engine, and still match
-    the python oracle through the fallback."""
+    """r5 (VERDICT #3): the cap bounds the one task's EDGE list. A clique
+    on 8 nodes carries 28 edges — under a node-count reading of cap=20 it
+    would stay in the one task, but the task materializes 28 edge rows, so
+    it must route to the frontier engine, and still match the python
+    oracle through the fallback."""
     from cpp_near_dedupe_spark.operators.greedy import greedy_decide_py
 
     clique = [(i, j) for i in range(8) for j in range(i + 1, 8)]  # 28 edges
     ids = list(range(8))
     out = _over_cap_greedy(spark, monkeypatch, ids, clique, cap=20)
     assert out == greedy_decide_py(clique, ids)
+
+
+def test_over_cap_deep_chain_exceeds_round_budget(spark, monkeypatch):
+    """Above the cap the frontier takes the whole graph, so a decision chain
+    deeper than ``max_rounds`` raises even when it is a small component."""
+    from cpp_near_dedupe_spark.operators import clustering
+
+    chain = [(i, i + 1) for i in range(10)]
+    star = [(100, j) for j in range(101, 120)]
+    monkeypatch.setattr(clustering, "_LOCAL_EDGE_CAP", 20)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        greedy_resolve(
+            _ids_df(spark, range(11)), _edges_df(spark, chain + star), CFG,
+            max_rounds=3,
+        )
 
 
 def test_compact_lock_single_writer(spark, tmp_path):

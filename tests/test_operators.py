@@ -322,9 +322,9 @@ def test_connected_components_round_budget(spark, monkeypatch):
 
 
 def test_greedy_component_cache_drains(spark):
-    """The r6 tagged-edges persist in the greedy component router must
-    follow the cache.py lifecycle: registered while the query is live,
-    gone after release_all()."""
+    """Greedy resolution persists nothing through the cache.py registry:
+    the one-task path reads a localCheckpoint, so the registry is empty
+    while the query is live, before any release_all()."""
     from cpp_near_dedupe_spark.cache import release_all, tracked_count
     from cpp_near_dedupe_spark.operators.greedy import greedy_resolve
 
@@ -339,8 +339,6 @@ def test_greedy_component_cache_drains(spark):
         out = greedy_resolve(docs, edges, CFG)
         n = out.count()
         assert n == 6
-        assert tracked_count() >= 1  # the tagged persist is registered
-        release_all()
         assert tracked_count() == 0
     finally:
         release_all()
