@@ -27,9 +27,9 @@ parts. One rule, decided by the edge count, as in
   decides every doc whose earlier neighbors are all decided. Round count
   = length of the longest decision chain (`LAST_FRONTIER_ROUNDS` records
   it); per round everything is hash joins, lazily localCheckpoint-ed,
-  one Spark job per round. It is also the independent implementation the
-  tests cross-verify against (plus the driver's recursive-CTE DuckDB
-  oracle, ``lsh_sql_greedy_kept``).
+  one checkpointed count per round. It is also the independent
+  implementation the tests cross-verify against (plus the recursive-CTE
+  DuckDB oracle of ``lsh_sql_greedy_kept`` in ``__spark_entry__``).
 """
 
 from __future__ import annotations
