@@ -138,9 +138,8 @@ def _frontier_dropped(e: DataFrame, max_rounds: int) -> DataFrame | None:
     * the rest of the frontier → retained;
     * edges out of dropped docs are discarded (they can never drop anyone).
 
-    Every round is lazily localCheckpoint-ed and the same job that
-    materializes it counts the remaining undecided set — one Spark job per
-    round, bounded lineage. Raises only if undecided docs REMAIN after
+    Every round is lazily localCheckpoint-ed and materialized by the count
+    of the remaining undecided set — bounded lineage. Raises only if undecided docs REMAIN after
     ``max_rounds`` (converging on exactly the last round is success).
     """
     global LAST_FRONTIER_ROUNDS

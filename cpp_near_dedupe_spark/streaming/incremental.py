@@ -213,11 +213,11 @@ def dedupe_increment(
     state are dropped outright (they can never be retained, so they also
     cannot drop anyone); (2) the remaining docs run the arrival-order
     greedy resolve (operators/greedy.py: one task under its edge cap)
-    over the within-batch edges restricted to them. The two modes genuinely differ: for batch docs
-    X < Y with X~Y, where X matches state but Y does not, the default
-    drops both (Y loses to X within-batch, X loses to state) while the
-    reference keeps Y (its only match X was never retained) — pinned in
-    tests/test_greedy.py.
+    over the within-batch edges restricted to them. The two modes
+    genuinely differ: for batch docs X < Y with X~Y, where X matches state
+    but Y does not, the default drops both (Y loses to X within-batch, X
+    loses to state) while the reference keeps Y (its only match X was
+    never retained) — pinned in tests/test_greedy.py.
 
     ``family`` selects the hash family and the rules its oracle fixes
     (plans/pipeline.py ``FAMILIES``)."""
